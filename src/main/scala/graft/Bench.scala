@@ -16,7 +16,6 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_ONLY=q31,q32 — iterate on a subset without paying the
     // full-suite wall-clock. Resolved BEFORE the SparkSession: a typo'd
     // filter fails in milliseconds, not after Spark startup + warmup.
@@ -24,7 +23,7 @@ object Bench {
     // session knobs + cache release shared with PlanStamp via
     // BenchSession — the plan-shape gate compares their plans, so the
     // conf block is physically one definition (review r20 #3)
-    val spark = BenchSession.build(cpus)
+    val spark = BenchSession.build(BenchSession.cpus)
     // warm before timing: JVM/codegen/scheduler init PLUS the Hadoop
     // FileSystem + parquet datasource stack (range().count() alone never
     // touches the I/O path, which is the larger first-touch cost) —

@@ -2,28 +2,38 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE definition of the bench-family session knobs and the between-runs
-  * cache release, shared by [[Bench]] and [[PlanStamp]] (review r20 #3):
-  * the plan-shape gate's validity rests on PlanStamp describing exactly
-  * the plans Bench (and a cluster deploy) would get, so the conf block
-  * must be physically shared — a future Bench conf tune (broadcast
-  * threshold, shuffle partitions) that PlanStamp missed would make the
-  * gate compare apples to oranges with no error. */
+/** The one session definition for every main ([[Bench]], [[PlanStamp]],
+  * [[Verify]], [[PlanLint]], [[Explain]], [[StreamDemo]],
+  * [[graft.ml.ReferenceAls]]) and the test harness, plus the between-runs
+  * cache release. One definition because the configuration the oracle
+  * checks (Verify) and the plans the gate stamps (PlanStamp) must be the
+  * configuration that is benched.
+  *
+  * Callers that truly differ set the key with `spark.conf.set` right
+  * after [[build]], so each difference is explicit:
+  *  - Verify sets `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`
+  *    (not INT96) so pyarrow/DuckDB read its dumps with the oracle's
+  *    timestamp semantics;
+  *  - Explain `--codegen` sets `spark.sql.adaptive.enabled=false`, because
+  *    AQE wraps the whole plan before execution and hides the codegen
+  *    subtrees from `debugCodegen`;
+  *  - the tests build with a fixed `"4"` cores instead of [[cpus]], so
+  *    partition-count assertions do not depend on the host. */
 object BenchSession {
+
+  /** Default core count: `SPARK_GRAFT_CPUS` if set, else the host's. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   /** local[cpus] with cpus-sized shuffle partitioning, AQE + partition
     * coalescing, the graft SQL extensions, UTC, UI off. */
   def build(cpus: String): SparkSession = {
-    // Shuffle parallelism follows the core count by default (the same
-    // knob a cluster deploy derives from its executor count); a deploy
-    // whose data volume warrants more reduce partitions overrides via
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS without a rebuild. AQE coalescing
-    // (below) sizes the actual post-shuffle partitions from the data.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      // shuffle parallelism follows the core count (the knob a cluster
+      // deploy derives from its executor count); AQE coalescing (below)
+      // sizes the actual post-shuffle partitions from the data
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // parallelismFirst is deliberately left at its default (true):

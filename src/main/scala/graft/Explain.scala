@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of a registered query and
   * time its execution (same noop action as Bench). Usage:
   * `runMain graft.Explain <queryName> [sfDir] [--no-run]`. */
@@ -11,22 +9,14 @@ object Explain {
     // flags may follow the query name directly (`Explain q01 --twice`)
     val positional = args.drop(1).filterNot(_.startsWith("--"))
     val sfDir = positional.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE wraps the whole plan pre-execution, hiding codegen subtrees
-      // from debugCodegen — disable it in --codegen mode only
-      .config("spark.sql.adaptive.enabled",
-        (!args.contains("--codegen")).toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession.build(BenchSession.cpus)
+    // AQE wraps the whole plan pre-execution, hiding codegen subtrees
+    // from debugCodegen — disable it in --codegen mode only
+    if (args.contains("--codegen"))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
     // extension sanity: the custom functions must already be resolvable
-    // here — injected at session BUILD time via GraftExtensions, before
-    // any runtime VectorFunctions.register fallback runs
+    // here, injected at session build time by GraftExtensions — before
+    // any query's VectorFunctions.register check runs
     println("[explain] graft_cosine_sim injected via spark.sql.extensions: " +
       spark.catalog.functionExists(graft.functions.VectorFunctions.CosineName))
     if (args.contains("--codegen")) {

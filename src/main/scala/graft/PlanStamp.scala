@@ -30,12 +30,11 @@ object PlanStamp {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = args.drop(1).headOption
       .getOrElse("target/plan_shape_stamp.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = OnlyFilter.resolve("planstamp",
       QueryRegistry.all.map(_.name).toSet)
     // SAME session knobs as Bench, by construction (BenchSession —
     // the stamp must describe the plans the bench would get)
-    val spark = BenchSession.build(cpus)
+    val spark = BenchSession.build(BenchSession.cpus)
     val selected = QueryRegistry.all
       .filter(q => only.forall(_.contains(q.name)))
     val shapes = selected.flatMap { q =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamingWindows
 
 /** Dev tool: run one of the streaming wrappers against a static fixture
@@ -10,14 +9,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession.build(BenchSession.cpus)
     // nanosAsLong is set by Tables' footer probe iff the fixture needs it
     val q = mode match {
       case "tumbling"   => StreamingWindows.runTumblingStream(spark, sfDir, "demo")

@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_ONLY=q17,q32 — builder-side targeted re-verification;
     // the driver never sets it (full dump). Resolved BEFORE the
     // SparkSession: a typo'd or degenerate filter (which would
@@ -14,18 +12,10 @@ object Verify {
     // green for a query that never ran, or run zero queries and exit
     // 0) fails in milliseconds, not after Spark startup.
     val only = OnlyFilter.resolve("verify", SparkEntry.queries.keySet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // micros (not INT96) so the driver's pyarrow/duckdb read the dumps
-      // with the same timestamp semantics as the oracle
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the benched session; micros (not INT96) so pyarrow/DuckDB read
+    // the dumps with the oracle's timestamp semantics
+    val spark = BenchSession.build(BenchSession.cpus)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // A failed query leaves no parquet dir; errors.json names every
     // failure so a missing dump is never silently "unmeasured".
@@ -77,12 +67,9 @@ object Verify {
           System.err.println(s"[verify] $name FAILED: $e")
           Some(name -> e.toString.take(500))
         } finally {
-          // multi-pass ops leave their (bounded) output frames and
-          // dictionary RDDs persisted for their consumers; release them
-          // between queries so cache residency never accumulates
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          // release what multi-pass ops left persisted for their
+          // consumers, so cache residency never accumulates
+          BenchSession.releaseCaches(spark)
         }
     }
     val errJson = errors

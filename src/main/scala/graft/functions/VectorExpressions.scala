@@ -296,7 +296,7 @@ object MinhashParams {
   * at session build time — the deployment path for a cluster
   * (`spark.sql.extensions=graft.functions.GraftExtensions`), where every
   * session gets the functions without any runtime registration call.
-  * [[VectorFunctions.register]] remains the fallback for sessions built
+  * [[VectorFunctions.register]] installs them only on sessions built
   * without the extension. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -325,7 +325,7 @@ object VectorFunctions {
   /** Shared builder with an arity check: silently dropping extra args
     * (or throwing IndexOutOfBounds on too few) would be a wrong-result /
     * unreadable-error hazard for SQL users of the injected function. */
-  private[functions] val cosineBuilder: Seq[Expression] => Expression = {
+  private[graft] val cosineBuilder: Seq[Expression] => Expression = {
     case Seq(a, b) => CosineSimilarity(a, b)
     case exprs => throw new IllegalArgumentException(
       s"$CosineName expects exactly 2 arguments (array<double>, " +
@@ -334,7 +334,7 @@ object VectorFunctions {
 
   val LshName = "graft_lsh_bands"
 
-  private[functions] val lshBuilder: Seq[Expression] => Expression = {
+  private[graft] val lshBuilder: Seq[Expression] => Expression = {
     case Seq(v, nb, bpb) => SignLshBands(v, nb, bpb)
     case exprs => throw new IllegalArgumentException(
       s"$LshName expects exactly 3 arguments (array<double>, bands, " +
@@ -343,28 +343,18 @@ object VectorFunctions {
 
   val MinhashName = "graft_minhash_mins"
 
-  private[functions] val minhashBuilder: Seq[Expression] => Expression = {
+  private[graft] val minhashBuilder: Seq[Expression] => Expression = {
     case Seq(s, nh) => MinhashMins(s, nh)
     case exprs => throw new IllegalArgumentException(
       s"$MinhashName expects exactly 2 arguments (array<long>, " +
         s"numHashes); got ${exprs.length}")
   }
 
-  /** Sessions this process has already registered into. Weak keys: the
-    * set must never pin a closed SparkSession in memory. */
-  private val registeredSessions: java.util.Set[SparkSession] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** True iff both graft_ names resolve to OUR builder instances in the
+  /** True iff all graft_ names resolve to OUR builder instances in the
     * session's registry. Identity (eq), not mere existence: a foreign
     * `CREATE OR REPLACE TEMPORARY FUNCTION` squatting on a graft_ name
-    * after registration must be healed exactly like a drop — name
-    * existence alone would silently keep it and corrupt every
-    * similarity score. Only called when the session is already latched
-    * (or under the lock), so it never triggers sessionState lazy init
-    * on an unseen session. */
+    * must be healed exactly like a drop — name existence alone would
+    * silently keep it and corrupt every similarity score. */
   private def bound(spark: SparkSession): Boolean = {
     val reg = spark.sessionState.functionRegistry
     Seq(CosineName -> cosineBuilder, LshName -> lshBuilder,
@@ -376,49 +366,24 @@ object VectorFunctions {
     }
   }
 
-  /** Register the expressions in the session's function registry (public
+  /** Install the expressions in the session's function registry (public
     * Catalyst API — Column-from-Expression constructors are private[sql]
     * in Spark 4, so resolution goes through `call_function` instead).
-    * Idempotent; called per query build, so the normal path is a cheap
-    * fast path: latched session + both names still bound to our
-    * builders → return (two in-memory lookups whose only contention is
-    * other microsecond set/registry ops — never the registerLock, so
-    * it cannot block behind another session's first registration,
-    * which may run arbitrary sessionState/extension init). Otherwise,
-    * under registerLock:
-    * `createOrReplaceTempFunction` both names — replacing any stale or
-    * foreign squatter, never silently keeping it — and latch the
-    * session only AFTER both are in place, so a concurrent caller can
-    * never observe register() returning while a name is unresolvable,
-    * and a registration that throws is retried on the next call instead
-    * of being latched as done. Repeat registration (and its
-    * replace-WARN) happens only on heal — a user DROP or foreign
-    * replace of a graft_ name — so the WARN logs at most once per
-    * session in the normal path. Extension-injected sessions get
-    * re-bound to the identical shared builder — a no-op. */
-  def register(spark: SparkSession): Unit = {
-    if (registeredSessions.contains(spark) && bound(spark)) return
-    // Dedicated lock, NOT the synchronizedSet's own monitor: every
-    // method of a Collections.synchronizedSet synchronizes on the
-    // wrapper, so holding THAT monitor across sessionState init would
-    // make the fast path's contains() block behind it — the exact
-    // serialization the fast path exists to avoid. Under registerLock,
-    // contains()/add() only contend with each other's microsecond set
-    // ops, never with a registration in flight. Visibility: the slow
-    // path registers BEFORE add(), and the set's own monitor
-    // (released by add, acquired by a fast-path contains) carries the
-    // happens-before; the registry's own internal synchronization
-    // covers bound()'s reads.
-    registerLock.synchronized {
-      if (!registeredSessions.contains(spark) || !bound(spark)) {
+    * Idempotent check-then-install, called per query build: a no-op on
+    * sessions built with [[GraftExtensions]] (the names already resolve
+    * to the shared builders), so nothing is re-registered and nothing
+    * logs a replace. A session without the extension, or one where a
+    * graft_ name was dropped or replaced, is (re)installed under the
+    * lock, replacing any squatter rather than keeping it. */
+  def register(spark: SparkSession): Unit =
+    if (!bound(spark)) registerLock.synchronized {
+      if (!bound(spark)) {
         val reg = spark.sessionState.functionRegistry
         reg.createOrReplaceTempFunction(CosineName, cosineBuilder, "internal")
         reg.createOrReplaceTempFunction(LshName, lshBuilder, "internal")
         reg.createOrReplaceTempFunction(MinhashName, minhashBuilder, "internal")
-        registeredSessions.add(spark)
       }
     }
-  }
 
   private val registerLock = new Object
 

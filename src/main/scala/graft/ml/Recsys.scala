@@ -113,7 +113,7 @@ object Recsys {
       // by grid position, so completion order never enters — the r21
       // qml53 argument), re-pinned by ReferenceAlsSpec/scale_suite.
       val best = Classifiers.tvsGrid(als, grid, ev, train,
-        parallelism = sys.env.getOrElse("SPARK_GRAFT_ALS_PAR", "4").toInt)
+        parallelism = 4)
       // persist across the two evaluators (the fitAls rationale): the
       // rmse and r2 passes would otherwise each re-run the transform
       // lineage; metrics bit-identical, only the recompute is cut

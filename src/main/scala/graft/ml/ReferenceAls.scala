@@ -1,7 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.SparkSession
-import graft.Tables
+import graft.{BenchSession, Tables}
 
 /** Opt-in main running the reference's ALS tuning loop at its VERBATIM
   * configuration (reference `PySpark Scripts/bgrfunctions.py:182-191`):
@@ -23,15 +22,7 @@ object ReferenceAls {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession.build(BenchSession.cpus)
     // No checkpoint-dir setup here: `fitAlsGrid` self-anchors a temp
     // checkpoint dir for deep fits (maxIter > 10 — mandatory, or the
     // factor lineage overflows the task-deserialization stack at scale)

@@ -22,10 +22,8 @@ object StreamingWindows {
     * `spark.sql.shuffle.partitions` before the first checkpoint) — here
     * the key space is event_type × open 1h windows, a few dozen keys,
     * where the session's core-derived default (32 on the bench host)
-    * just multiplies per-batch file commits by empty stores. Env knob
-    * for a deploy whose key space is genuinely wide. */
-  val StateShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.toInt).getOrElse(8)
+    * just multiplies per-batch file commits by empty stores. */
+  val StateShufflePartitions: Int = 8
 
   /** A same-context session whose shuffle partitioning is state-sized
     * (see [[StateShufflePartitions]]): memory-sink temp views registered

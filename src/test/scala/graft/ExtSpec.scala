@@ -232,6 +232,25 @@ class ExtSpec extends AnyFunSuite {
     assert(math.abs(pairs((1L, 3L)) - 0.707107) < 1e-6)
   }
 
+  test("graft_ functions resolve to our builders before and after register") {
+    import graft.functions.VectorFunctions._
+    val ours = Seq(CosineName -> cosineBuilder, LshName -> lshBuilder,
+      MinhashName -> minhashBuilder)
+    def resolvesToOurs(s: org.apache.spark.sql.SparkSession): Boolean =
+      ours.forall { case (name, builder) =>
+        s.sessionState.functionRegistry.lookupFunctionBuilder(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+          .exists(_ eq builder)
+      }
+    // a new session of the shared context has seen no register call, so
+    // only the session extension can have bound the names
+    for (s <- Seq(spark.newSession(), spark)) {
+      assert(resolvesToOurs(s), "extension did not inject our builders")
+      register(s)
+      assert(resolvesToOurs(s), "register replaced our builders")
+    }
+  }
+
   test("graft_cosine_sim rejects wrong arity with a clear error") {
     graft.functions.VectorFunctions.register(spark)
     val e1 = intercept[Exception] {

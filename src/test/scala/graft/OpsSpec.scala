@@ -775,8 +775,7 @@ class OpsSpec extends AnyFunSuite {
         java.nio.file.Files.createFile(resolved)  // now a plain file
         // start from a clean cache slate so the post-state assertions
         // are exact (recompute-on-use keeps this safe for other tests)
-        spark.catalog.clearCache()
-        sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        BenchSession.releaseCaches(spark)
         val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
         intercept[Exception] {
           graft.ext.Dedup.connectedComponents(edges, "a", "b",

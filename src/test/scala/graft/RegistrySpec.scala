@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Registry contract checks: names unique, oracle discipline held. */
 class RegistrySpec extends AnyFunSuite {
@@ -16,6 +18,22 @@ class RegistrySpec extends AnyFunSuite {
     // r20 retired the last rows-only entry (qml51): the registry is
     // fully oracle-checked and must never regress to a weaker check
     assert(noOracle.isEmpty, s"missing oracle: $noOracle")
+  }
+
+  test("sessions are built and the core count read only in BenchSession") {
+    // split literals, so this file does not match its own scan
+    val builder = "SparkSession" + ".builder"
+    val cpusKey = "\"SPARK_GRAFT_" + "CPUS\""
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    for (needle <- Seq(builder, cpusKey)) {
+      val hits = sources.filter(Files.readString(_).contains(needle))
+        .map(_.getFileName.toString)
+      assert(hits == Seq("BenchSession.scala"), s"$needle in $hits")
+    }
   }
 
   test("oracle SQL never references fixture paths or engine internals") {

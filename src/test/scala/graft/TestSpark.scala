@@ -4,19 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (sbt forks a single
   * test JVM; suites may run concurrently — Spark handles concurrent jobs
-  * on one context). Small shuffle partitioning keeps tiny-DF tests fast. */
+  * on one context). The benched session, on a fixed 4 cores so results
+  * and partition counts do not depend on the host. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = BenchSession.build("4")
 
   /** Temp dir that deletes itself when the test JVM exits — every spec
     * staging fixture goes through here so test runs stop accumulating
