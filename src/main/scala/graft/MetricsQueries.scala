@@ -106,23 +106,25 @@ object MetricsQueries {
           .agg(sum(col("y")).as("npos_g"), count(lit(1)).as("n_g"))
         val ps = RelationalOps.materialized(RelationalOps.zipWithPrefixSum(
           groups, Seq(col("score")), "n_g", "cum_before"))
-        val total = ps.agg(sum(col("n_g"))).head().getLong(0)
-        val med = RelationalOps.exactPercentileFromPrefix(
-          ps, "score", "n_g", "cum_before", total, 0.5)
-        val r = ps.agg(
-          sum(when(col("score") > med, col("npos_g")).otherwise(0.0))
-            .as("tp_d"),
-          sum(when(col("score") > med, col("n_g") - col("npos_g"))
-            .otherwise(0.0)).as("fp_d"),
-          sum(when(col("score") <= med, col("n_g") - col("npos_g"))
-            .otherwise(0.0)).as("tn_d"),
-          sum(when(col("score") <= med, col("npos_g")).otherwise(0.0))
-            .as("fn_d"),
-          sum(col("npos_g") * (col("cum_before").cast("double")
-            + (col("n_g") + 1).cast("double") / 2)).as("rpos"),
-          sum(col("npos_g")).as("npos"),
-          sum(col("n_g") - col("npos_g")).as("nneg")).head()
-        ps.unpersist()
+        val (total, r) = try {
+          val total = ps.agg(sum(col("n_g"))).head().getLong(0)
+          val med = RelationalOps.exactPercentileFromPrefix(
+            ps, "score", "n_g", "cum_before", total, 0.5)
+          val r = ps.agg(
+            sum(when(col("score") > med, col("npos_g")).otherwise(0.0))
+              .as("tp_d"),
+            sum(when(col("score") > med, col("n_g") - col("npos_g"))
+              .otherwise(0.0)).as("fp_d"),
+            sum(when(col("score") <= med, col("n_g") - col("npos_g"))
+              .otherwise(0.0)).as("tn_d"),
+            sum(when(col("score") <= med, col("npos_g")).otherwise(0.0))
+              .as("fn_d"),
+            sum(col("npos_g") * (col("cum_before").cast("double")
+              + (col("n_g") + 1).cast("double") / 2)).as("rpos"),
+            sum(col("npos_g")).as("npos"),
+            sum(col("n_g") - col("npos_g")).as("nneg")).head()
+          (total, r)
+        } finally ps.unpersist()
         val spark = s
         import spark.implicits._
         Seq((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),

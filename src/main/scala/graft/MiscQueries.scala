@@ -112,7 +112,8 @@ object MiscQueries {
         // same value in two codegen aggregation passes with bounded
         // memory everywhere (approx bracket → exact in-bracket
         // selection; bit-equal to the built-in by the same
-        // getPercentile arithmetic, ScalaCheck-pinned in OpsSpec). The
+        // getPercentile arithmetic, pinned by the fixed-fixture OpsSpec test
+        // "exactPercentileBracketed is bit-equal to functions.percentile"). The
         // 1-row reads are bounded driver lookups (the q52/qml50
         // pattern); everything still computes inside this query's
         // timed span.

@@ -455,23 +455,11 @@ object Dedup {
     * (a,b),(b,c) must collapse into one cluster {a,b,c} with a single
     * canonical survivor, or the "dedup" keeps transitive duplicates.
     *
-    * Two algorithms behind the `algorithm` flag:
+    * Iterative min-label propagation: O(diameter) rounds at one action
+    * per round. Near-duplicate graphs are star/clique shaped (diameter
+    * ≤ ~3), so 3–4 rounds in practice.
     *
-    *  - `"minlabel"` (default) — iterative min-label propagation,
-    *    O(diameter) rounds at one action per round. Near-duplicate
-    *    graphs are star/clique shaped (diameter ≤ ~3), so 3–4 rounds in
-    *    practice; the right default for dedup.
-    *  - `"star"` — alternating large-star/small-star contraction
-    *    (Kiveris et al., "Connected Components in MapReduce and
-    *    Beyond"), O(log² n) worst-case rounds (O(log n) typical; the
-    *    O(log n) bound is for the two-phase variant) on ANY graph
-    *    shape — the fallback for
-    *    adversarial long-path graphs, where min-label needs O(n) rounds
-    *    (a 100-node path: 99 rounds vs ~6). Costs more per round (two
-    *    star transforms + an exact edge-set convergence probe), so it
-    *    only wins when the diameter is large.
-    *
-    * Both truncate lineage per round by rebuilding the frame from an
+    * Each round truncates lineage by rebuilding the frame from an
     * explicitly persisted row RDD (`LogicalRDD` boundary) — without
     * truncation the plan tree doubles every iteration and Catalyst
     * re-derives the whole chain (the classic iterative-algorithm trap).
@@ -481,101 +469,22 @@ object Dedup {
     * round tables are ever materialized; the RETURNED frame stays
     * persisted for the caller.
     *
-    * `checkpointDir`: when set, every per-round RDD is ALSO reliably
-    * checkpointed there (`RDD.checkpoint`), so at cluster scale the
-    * iteration survives executor loss — a lost cache block under plain
-    * persist would otherwise force recomputing the round's lineage from
-    * its (already-unpersisted) parent. The default (None, in-memory
-    * persist only) is right for the local sandbox; checkpoint files
-    * accumulate under the dir until it is deleted by the caller. If the
-    * loop succeeds but the post-loop checkpoint-dir restore fails, the
-    * restore error propagates (the CheckpointScope contract) and the
-    * would-be result's cached blocks are released first — the caller
-    * gets an exception, never a leaked persist (ADVICE r12).
-    *
     * Returns (id, label) for every node that appears in an edge, label
     * = min id of the component; a silent non-converged return would
     * hand back WRONG labels, so non-convergence throws. */
   def connectedComponents(edges: DataFrame, a: String, b: String,
-                          maxIter: Int = 25,
-                          checkpointDir: Option[String] = None,
-                          algorithm: String = "minlabel"): DataFrame = {
-    // The checkpoint dir is session-global state: point the session at
-    // the caller's dir only for the loop's duration, then restore —
-    // leaving it set would silently redirect every later checkpoint user
-    // (the fitAlsGrid lesson, ADVICE r8). The restore goes through
-    // [[graft.CheckpointScope]], which pins the prior dir's ROOT: a naive
-    // restore via the resolved (uuid-suffixed) getCheckpointDir value
-    // would re-anchor one level deeper on every call and nest
-    // unboundedly across repeated CC runs (ADVICE r9). The checkpoint
-    // FILES written under the caller's dir are theirs to keep or delete
-    // (documented above).
-    val sc = edges.sparkSession.sparkContext
-    val prevCp = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    // Track the loop's own exception so the restore can distinguish its
-    // two failure contracts (CheckpointScope Scaladoc): suppress-into-
-    // primary when one is in flight, rethrow when the loop succeeded.
-    var primary: Throwable = null
-    var release: () => Unit = () => ()
-    try {
-      val (labels, rel) = algorithm match {
-        case "minlabel" => ccMinLabel(edges, a, b, maxIter, checkpointDir.isDefined)
-        case "star"     => ccLargeSmallStar(edges, a, b, maxIter, checkpointDir.isDefined)
-        case other => throw new IllegalArgumentException(
-          s"connectedComponents: unknown algorithm '$other' " +
-            "(expected 'minlabel' or 'star')")
-      }
-      release = rel
-      labels
-    } catch { case t: Throwable =>
-      primary = t; throw t
-    } finally if (checkpointDir.isDefined) {
-      try graft.CheckpointScope.restore(sc, prevCp, Option(primary))
-      catch { case t: Throwable =>
-        // restore() rethrows only on the success path (primary == null),
-        // so the computed result — deliberately left persisted for a
-        // caller that now never receives a handle — would leak its
-        // cached blocks for the session's lifetime (ADVICE r12).
-        // Release them before the restore failure propagates; the
-        // checkpoint FILES under the caller's dir remain theirs to
-        // delete regardless (documented above).
-        try release() catch { case u: Throwable => t.addSuppressed(u) }
-        throw t
-      }
-    }
-  }
-
-  /** Persist (and, with a checkpoint dir, reliably checkpoint) `df`'s
-    * rows and rebuild the frame from the anchored RDD — the per-round
-    * lineage-truncation boundary both CC algorithms iterate on. LAZY:
-    * the caller decides which action materializes the blocks (both CC
-    * loops fold their convergence probe into the round's own
-    * materializing job, so each round stays ONE job; star uses this
-    * helper only for its pre-loop node/edge anchors). The caller owns
-    * the returned RDD handle for eager unpersist. */
-  private def anchorRound(df: DataFrame, checkpoint: Boolean)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val r = df.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (checkpoint) r.checkpoint()
-    (df.sparkSession.createDataFrame(r, df.schema), r)
-  }
-
-  /** Returns the label frame plus a release thunk that unpersists its
-    * backing blocks — used only on the success-path restore-failure
-    * branch above, where the frame is about to be discarded. */
-  private def ccMinLabel(edges: DataFrame, a: String, b: String,
-                         maxIter: Int, useCp: Boolean)
-      : (DataFrame, () => Unit) = {
+                          maxIter: Int = 25): DataFrame = {
     val spark = edges.sparkSession
     val sym = RelationalOps.materialized(
       edges.select(col(a).as("src"), col(b).as("dst"))
         .union(edges.select(col(b).as("src"), col(a).as("dst")))
         .distinct())
-    var (labels, labelsRdd) = anchorRound(
-      sym.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")), useCp)
+    val seed = sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id"))
+    // lazy: the first round's job materializes these blocks
+    var labelsRdd = seed.rdd.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var labels = spark.createDataFrame(labelsRdd, seed.schema)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -600,7 +509,6 @@ object Dedup {
         if (row.getBoolean(2)) acc.add(1L)
         org.apache.spark.sql.Row(row.get(0), row.get(1))
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (useCp) nextRdd.checkpoint()
       nextRdd.count()
       converged = acc.value == 0L
       labelsRdd.unpersist(blocking = false)
@@ -610,118 +518,14 @@ object Dedup {
     }
     sym.unpersist()
     // real dup graphs converge in a handful of rounds, so hitting this
-    // means the graph has a pathological long path (raise maxIter or
-    // switch to algorithm = "star"). Release the final round's label
-    // blocks before throwing — the caller never receives a handle to
-    // them (the star variant does the same with its eRdd/nodesRdd).
+    // means the graph has a pathological long path (raise maxIter).
+    // Release the final round's label blocks before throwing — the
+    // caller never receives a handle to them.
     if (!converged) {
       labelsRdd.unpersist(blocking = false)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
     }
-    (labels, () => labelsRdd.unpersist(blocking = false))
-  }
-
-  /** Large-star/small-star contraction. Each round:
-    *
-    *  - LARGE-STAR: every node u attaches each strictly LARGER neighbor
-    *    to m(u) = min(Γ(u) ∪ {u}) — long tails fold onto local minima;
-    *  - SMALL-STAR: every node u re-attaches its smaller-or-equal
-    *    neighborhood (and itself) to that minimum — partial stars merge.
-    *
-    * Both transforms preserve connectivity and only ever point nodes at
-    * SMALLER ids, and the edge set is a fixpoint exactly when every
-    * component is a star rooted at its minimum — so convergence is
-    * detected by an EXACT set-equality probe on the canonicalized edge
-    * set, never a sampled or hashed one: both sets are distinct, so
-    * `next == prev` ⟺ `|next| == |prev| ∧ next ⊆ prev`, and the subset
-    * half rides the round's own materializing job as a per-row
-    * "edge is new" flag tallied through an accumulator (the min-label
-    * pattern) — ONE action per round, no separate probe job.
-    * O(log² n) worst-case rounds for this alternating variant (Kiveris
-    * et al. prove O(log n) only for the two-phase variant; in practice
-    * O(log n)-ish on real graphs); ~4 shuffles + 1 action per round vs
-    * min-label's 2 + 1, which is why it is the flagged fallback rather
-    * than the default. */
-  private def ccLargeSmallStar(edges: DataFrame, a: String, b: String,
-                               maxIter: Int, useCp: Boolean)
-      : (DataFrame, () => Unit) = {
-    val spark = edges.sparkSession
-    // every node that appears in any edge must come out labeled, and the
-    // contraction ends with only (child, root) edges — remember the node
-    // set up front (self-loop-only nodes would otherwise vanish with
-    // their dropped loops)
-    val (nodes, nodesRdd) = anchorRound(
-      edges.select(col(a).as("id")).union(edges.select(col(b).as("id")))
-        .distinct(), useCp)
-    // canonical form throughout: u > v, no self-loops, distinct
-    var (e, eRdd) = anchorRound(
-      edges.select(col(a).as("x"), col(b).as("y"))
-        .filter(col("x") =!= col("y"))
-        .select(greatest(col("x"), col("y")).as("u"),
-          least(col("x"), col("y")).as("v"))
-        .distinct(), useCp)
-    var eCnt = eRdd.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // large-star over the symmetric neighborhood
-      val sym = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val mL = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.join(mL, "u").filter(col("v") > col("u"))
-        .select(col("v").as("lu"), col("m").as("lv"))
-        .filter(col("lu") =!= col("lv"))
-        .distinct()
-      // small-star: `large` is already (bigger, smaller)-directed, so
-      // Γ≤(u) is exactly its v-side; m = min(Γ≤ ∪ {u}) = min(v)
-      val mS = large.groupBy("lu").agg(min(col("lv")).as("m"))
-      val small = large.join(mS, "lu")
-        .filter(col("lv") =!= col("m"))
-        .select(col("lv").as("s"), col("m"))
-        .union(mS.select(col("lu").as("s"), col("m")))
-        .select(greatest(col("s"), col("m")).as("u"),
-          least(col("s"), col("m")).as("v"))
-        .distinct()
-      // ONE action per round (the min-label pattern): the next edge set
-      // is left-joined against the previous round's cached set, and the
-      // job that materializes this round's blocks tallies a per-row
-      // "edge is new" flag through an accumulator while its count
-      // doubles as the size probe. Both sets are distinct, so
-      // acc == 0 (next ⊆ prev) plus equal counts is EXACT set equality.
-      // A task retry can only over-count the accumulator, so a spurious
-      // non-zero costs at most one extra round; a zero is exact, so
-      // convergence is never declared early.
-      val flagged = small
-        .join(e.withColumn("__old", lit(true)), Seq("u", "v"), "left")
-        .select(col("u"), col("v"), col("__old").isNull.as("__new"))
-      val acc = spark.sparkContext.longAccumulator(s"cc_star_new_$iter")
-      val nextRdd = flagged.rdd.map { row =>
-        if (row.getBoolean(2)) acc.add(1L)
-        org.apache.spark.sql.Row(row.get(0), row.get(1))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (useCp) nextRdd.checkpoint()
-      val nextCnt = nextRdd.count()
-      converged = nextCnt == eCnt && acc.value == 0L
-      eRdd.unpersist(blocking = false)
-      e = spark.createDataFrame(nextRdd, e.schema)
-      eRdd = nextRdd; eCnt = nextCnt
-      iter += 1
-    }
-    if (!converged) {
-      eRdd.unpersist(blocking = false)
-      nodesRdd.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"connectedComponents(star) did not converge in $maxIter rounds")
-    }
-    // fixpoint edges are (child, root) stars; roots label themselves
-    val labels = RelationalOps.materialized(
-      nodes.join(e.select(col("u").as("id"), col("v").as("__root")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("__root"), col("id")).as("label")))
-    eRdd.unpersist(blocking = false)
-    nodesRdd.unpersist(blocking = false)
-    (labels, () => { labels.unpersist(blocking = false); () })
+    labels
   }
 }

@@ -477,7 +477,7 @@ object RelationalOps {
     * long-lived library callers on the hot-key path should use
     * [[asOfJoinWithRelease]] and call the release thunk once their own
     * output is materialized, else one cached union of both inputs leaks
-    * per call (the connectedComponents release-thunk convention). */
+    * per call. */
   def asOfJoin(left: DataFrame, right: DataFrame, key: String,
                time: String, out: String = "asof",
                hotKeyThreshold: Long = Long.MaxValue,

@@ -161,22 +161,6 @@ object GraftProps extends Properties("graft") {
       }
     }
 
-  property("large-star/small-star CC == min-label CC for any graph") =
-    forAll(Gen.listOfN(10,
-        Gen.zip(Gen.choose(0L, 15L), Gen.choose(0L, 15L)))) { edges0 =>
-      val edges = edges0.filter(e => e._1 != e._2)
-      edges.nonEmpty ==> {
-        val df = edges.toDF("a", "b")
-        val star = graft.ext.Dedup
-          .connectedComponents(df, "a", "b", algorithm = "star")
-          .as[(Long, Long)].collect().toMap
-        val minLabel = graft.ext.Dedup
-          .connectedComponents(df, "a", "b")
-          .as[(Long, Long)].collect().toMap
-        star == minLabel
-      }
-    }
-
   property("intersect/except == Scala set semantics for any multisets") =
     forAll(Gen.listOfN(20, Gen.choose(0, 8)),
         Gen.listOfN(20, Gen.choose(0, 8))) { (a, b) =>

@@ -554,248 +554,49 @@ class OpsSpec extends AnyFunSuite {
       shorty, "doc_id", "text", 3, 8, 4).count() == 0)
   }
 
-  test("star CC converges on a long path where min-label provably cannot") {
+  test("min-label CC fails loudly when the round budget runs out") {
     // 100-node path 0-1-2-...-99: the min label walks ONE hop per round,
-    // so min-label needs 99 rounds — capped at 15 it must fail loudly.
-    // Large-star/small-star halves long tails every round (polylog rounds):
-    // the same 15-round budget is plenty, and every node must land on
-    // label 0.
+    // so min-label needs 99 rounds — capped at 15 it must throw rather
+    // than hand back half-propagated labels.
     val path = (0L until 99L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalStateException] {
       graft.ext.Dedup.connectedComponents(path, "a", "b", maxIter = 15)
         .count()
     }
-    val star = graft.ext.Dedup
-      .connectedComponents(path, "a", "b", maxIter = 15, algorithm = "star")
-      .as[(Long, Long)].collect()
-    assert(star.length == 100 && star.forall(_._2 == 0L),
-      s"expected 100 nodes all labeled 0, got ${star.take(5).mkString(",")}")
-    // unknown algorithm name must be rejected, not silently defaulted
-    intercept[IllegalArgumentException] {
-      graft.ext.Dedup.connectedComponents(path, "a", "b",
-        algorithm = "labelprop")
-    }
   }
 
-  test("star CC runs one job per round (folded fixpoint probe)") {
-    // mirror of the min-label job audit: each star round must cost
-    // exactly ONE job — the count that materializes the round's edge
-    // set while an accumulator tallies the "edge is new" flags (the old
-    // shape paid a second exceptAll probe whenever counts matched).
-    // Path 1-2-3-4-5-6 contracts in 4 rounds (two tail-folds, one
-    // star-completion, one quiet fixpoint round), so the inventory is:
-    // 1 initial canonical-edge anchor + 4 round jobs + 1 final label
-    // materialization (the node anchor rides it lazily) = 6 jobs.
-    // AQE/broadcast-build jobs would hide the claim — disable as above.
-    val edges = (1L to 5L).map(i => (i, i + 1)).toDF("a", "b")
-    val sc = spark.sparkContext
-    val saved = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sc.setJobGroup("cc-star-jobs", "star CC job audit")
-    val labels = try graft.ext.Dedup.connectedComponents(
-        edges, "a", "b", algorithm = "star")
-      finally {
-        sc.clearJobGroup()
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
-    def groupJobs: Int = sc.statusTracker.getJobIdsForGroup("cc-star-jobs").length
-    var (prev, cur, spins) = (-1, groupJobs, 0)
-    while (prev != cur && spins < 50) {
-      prev = cur; Thread.sleep(100); cur = groupJobs; spins += 1
-    }
-    assert(cur <= 7, s"expected ~6 jobs (1 edge anchor + 4 rounds + " +
-      s"1 label materialize), got $cur")
-    val out = labels.as[(Long, Long)].collect()
-    assert(out.length == 6 && out.forall(_._2 == 1L))
-  }
-
-  test("CC with a reliable checkpoint dir: labels identical, files written") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_cp").toString
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
-      .toDF("a", "b")
-    val plain = graft.ext.Dedup.connectedComponents(edges, "a", "b")
-      .as[(Long, Long)].collect().toMap
-    def filesUnder(d: java.io.File): Int = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty)
-      kids.count(_.isFile) + kids.filter(_.isDirectory).map(filesUnder).sum
-    }
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(deleteRec)
-      f.delete()
-    }
-    try {
-      for (algo <- Seq("minlabel", "star")) {
-        val before = filesUnder(new java.io.File(dir))
-        val cpBefore = spark.sparkContext.getCheckpointDir
-        val cp = graft.ext.Dedup.connectedComponents(edges, "a", "b",
-            checkpointDir = Some(dir), algorithm = algo)
-          .as[(Long, Long)].collect().toMap
-        assert(cp == plain, s"$algo: checkpointed labels differ")
-        // the per-round RDDs really were checkpointed (executor-loss
-        // survival path), not just persisted
-        assert(filesUnder(new java.io.File(dir)) > before,
-          s"$algo: no checkpoint files written under $dir")
-        // the session-global checkpoint setting must come back: a CC run
-        // must not silently redirect later checkpoint users to its dir
-        assert(spark.sparkContext.getCheckpointDir == cpBefore,
-          s"$algo: session checkpoint dir left mutated")
-      }
-    } finally deleteRec(new java.io.File(dir))
-  }
-
-  test("repeated CC runs with a pre-set session checkpoint dir restore at a " +
-      "bounded depth (no per-call nesting)") {
-    // Spark's setCheckpointDir resolves a fresh uuid subdir, so a naive
-    // restore-by-resolved-path re-anchors one level deeper per CC call
-    // (ADVICE r9). CheckpointScope pins the root: depth must stay
-    // constant across repeated calls, one level under the prior dir.
-    val userRoot = java.nio.file.Files.createTempDirectory("graft_cc_user_cp")
-    val ccDir = java.nio.file.Files.createTempDirectory("graft_cc_loop_cp")
+  test("connectedComponents leaves only its result persisted and the " +
+      "session checkpoint dir untouched") {
+    // path 1-2-3-4-5 needs 4 propagation rounds + 1 quiet round; the
+    // pair 10-11 is a second component. Every intermediate (the
+    // symmetrized edges, the seed labels, each earlier round) must be
+    // released, so the returned labels are the only new persisted RDD.
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty,
       "test precondition: shared session must start with no checkpoint dir")
+    val cpRoot = java.nio.file.Files.createTempDirectory("graft_cc_cp")
+    BenchSession.releaseCaches(spark)
     try {
-      sc.setCheckpointDir(userRoot.toString)
-      val firstResolved = sc.getCheckpointDir.get
-      val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-      // getCheckpointDir returns a QUALIFIED uri (file:/tmp/...); strip
-      // the scheme/authority before counting so depth is measured on the
-      // filesystem path alone, whatever qualification Spark applies
-      def depthOf(p: String): Int =
-        java.nio.file.Paths.get(new java.net.URI(p).getPath).getNameCount
-      val depths = (1 to 3).map { _ =>
-        graft.ext.Dedup.connectedComponents(edges, "a", "b",
-          checkpointDir = Some(ccDir.toString)).count()
-        depthOf(sc.getCheckpointDir.get)
-      }
-      assert(depths.distinct.size == 1, s"restore depth drifted: $depths")
-      assert(depths.head == depthOf(firstResolved) + 1,
-        s"restore not anchored one level under the prior dir: $depths")
-      // getCheckpointDir returns a QUALIFIED uri (file:/tmp/...), so
-      // containment, not startsWith, against the raw tmp path
-      assert(sc.getCheckpointDir.get.contains(userRoot.toString),
-        "restore left the user's checkpoint root")
-    } finally {
-      sc.setCheckpointDir(null) // back to the shared session's unset state
-      graft.Staging.deleteRecursively(userRoot)
-      graft.Staging.deleteRecursively(ccDir)
-    }
-  }
-
-  test("CheckpointScope.restore suppresses its failure into a pending " +
-      "primary exception (finally-block safety)") {
-    // restore() runs in callers' finally blocks; when the loop's own
-    // exception is already propagating, a restore failure (deleted root,
-    // mkdirs refusal) must not escape and REPLACE it — it lands on the
-    // primary's suppressed list instead (ADVICE r10/r11). Forced here
-    // with a prev path nested under a plain FILE, which the local
-    // filesystem refuses to mkdirs under.
-    val sc = spark.sparkContext
-    assert(sc.getCheckpointDir.isEmpty,
-      "test precondition: shared session must start with no checkpoint dir")
-    val scoped = java.nio.file.Files.createTempDirectory("graft_cp_scoped")
-    val blocker = java.nio.file.Files.createTempFile("graft_cp_blocker", "")
-    try {
-      sc.setCheckpointDir(scoped.toString)
-      val scopedResolved = sc.getCheckpointDir
-      val primary = new RuntimeException("loop's own failure")
-      graft.CheckpointScope.restore(sc, Some(s"$blocker/nested"),
-        Some(primary)) // must not throw — primary is in flight
-      assert(primary.getSuppressed.nonEmpty,
-        "restore failure should be preserved on the primary's suppressed list")
-      // Post-state loosened (ADVICE r11): whether checkpointDir stays at
-      // the scoped resolved dir or comes back unset after a failing
-      // setCheckpointDir is a Spark implementation detail, not a
-      // contract. The safety property is only that nothing escaped and
-      // the session is in one of the two observable states.
-      assert(sc.getCheckpointDir == scopedResolved
-          || sc.getCheckpointDir.isEmpty,
-        s"unexpected post-failure checkpoint dir: ${sc.getCheckpointDir}")
+      sc.setCheckpointDir(cpRoot.toString)
+      val cpBefore = sc.getCheckpointDir
+      val before = sc.getPersistentRDDs.keySet
+      val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)) :+ (10L, 11L))
+        .toDF("a", "b")
+      val labels = graft.ext.Dedup.connectedComponents(edges, "a", "b")
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size == 1 && before.subsetOf(sc.getPersistentRDDs.keySet),
+        s"expected exactly one new persisted RDD, got $added")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "connectedComponents left a cached plan behind")
+      assert(sc.getCheckpointDir == cpBefore,
+        s"session checkpoint dir moved: $cpBefore -> ${sc.getCheckpointDir}")
+      val out = labels.as[(Long, Long)].collect().toMap
+      assert(out == (1L to 5L).map(_ -> 1L).toMap ++ Map(10L -> 10L, 11L -> 10L),
+        s"wrong labels: $out")
+      added.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = false))
     } finally {
       sc.setCheckpointDir(null)
-      java.nio.file.Files.deleteIfExists(blocker)
-      graft.Staging.deleteRecursively(scoped)
-    }
-  }
-
-  test("CheckpointScope.restore rethrows its failure when the scoped work " +
-      "succeeded (no silent dangling dir)") {
-    // With no primary exception in flight there is nothing to mask:
-    // swallowing would leave the session silently pointed at a scoped
-    // dir the caller may delete, with only a stderr line as evidence
-    // (ADVICE r11). The failure must surface to the caller.
-    val sc = spark.sparkContext
-    assert(sc.getCheckpointDir.isEmpty,
-      "test precondition: shared session must start with no checkpoint dir")
-    val scoped = java.nio.file.Files.createTempDirectory("graft_cp_scoped2")
-    val blocker = java.nio.file.Files.createTempFile("graft_cp_blocker2", "")
-    try {
-      sc.setCheckpointDir(scoped.toString)
-      val scopedResolved = sc.getCheckpointDir
-      intercept[Exception] {
-        graft.CheckpointScope.restore(sc, Some(s"$blocker/nested"))
-      }
-      assert(sc.getCheckpointDir == scopedResolved
-          || sc.getCheckpointDir.isEmpty,
-        s"unexpected post-failure checkpoint dir: ${sc.getCheckpointDir}")
-    } finally {
-      sc.setCheckpointDir(null)
-      java.nio.file.Files.deleteIfExists(blocker)
-      graft.Staging.deleteRecursively(scoped)
-    }
-  }
-
-  test("connectedComponents releases the computed result's blocks when a " +
-      "success-path restore failure discards it") {
-    // restore() rethrows when the loop SUCCEEDED; the result frame —
-    // deliberately left persisted for the caller — then never reaches a
-    // caller, so its cached blocks would leak for the session's lifetime
-    // (ADVICE r12). Forced by making the pre-CC session checkpoint dir
-    // unrestorable: capture its resolved path, then replace that dir
-    // with a plain FILE so restore's setCheckpointDir cannot mkdirs
-    // under it.
-    val sc = spark.sparkContext
-    assert(sc.getCheckpointDir.isEmpty,
-      "test precondition: shared session must start with no checkpoint dir")
-    val userRoot = java.nio.file.Files.createTempDirectory("graft_cc_user_cp2")
-    val ccDir = java.nio.file.Files.createTempDirectory("graft_cc_loop_cp2")
-    try {
-      for (algo <- Seq("minlabel", "star")) {
-        sc.setCheckpointDir(userRoot.toString)
-        val resolved = java.nio.file.Paths.get(
-          new java.net.URI(sc.getCheckpointDir.get).getPath)
-        java.nio.file.Files.delete(resolved)      // fresh uuid dir, empty
-        java.nio.file.Files.createFile(resolved)  // now a plain file
-        // start from a clean cache slate so the post-state assertions
-        // are exact (recompute-on-use keeps this safe for other tests)
-        BenchSession.releaseCaches(spark)
-        val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-        intercept[Exception] {
-          graft.ext.Dedup.connectedComponents(edges, "a", "b",
-            checkpointDir = Some(ccDir.toString), algorithm = algo)
-        }
-        // the loop itself converged; the surfaced failure is the restore,
-        // and the discarded result's blocks must have been released —
-        // no persisted RDDs and no cached plans may remain
-        assert(sc.getPersistentRDDs.isEmpty,
-          s"$algo: discarded CC result leaked persisted RDD blocks: " +
-            s"${sc.getPersistentRDDs.keySet}")
-        assert(spark.sharedState.cacheManager.isEmpty,
-          s"$algo: discarded CC result leaked a cached plan")
-        java.nio.file.Files.delete(resolved)      // reset for next algo
-        sc.setCheckpointDir(null)
-      }
-    } finally {
-      sc.setCheckpointDir(null)
-      graft.Staging.deleteRecursively(userRoot)
-      graft.Staging.deleteRecursively(ccDir)
+      graft.Staging.deleteRecursively(cpRoot)
     }
   }
 

@@ -1,11 +1,17 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Registry contract checks: names unique, oracle discipline held. */
 class RegistrySpec extends AnyFunSuite {
+
+  private def scalaFiles(root: String): List[Path] = {
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
 
   test("query names are unique and well-formed") {
     val names = QueryRegistry.all.map(_.name)
@@ -24,16 +30,22 @@ class RegistrySpec extends AnyFunSuite {
     // split literals, so this file does not match its own scan
     val builder = "SparkSession" + ".builder"
     val cpusKey = "\"SPARK_GRAFT_" + "CPUS\""
-    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)
     for (needle <- Seq(builder, cpusKey)) {
       val hits = sources.filter(Files.readString(_).contains(needle))
         .map(_.getFileName.toString)
       assert(hits == Seq("BenchSession.scala"), s"$needle in $hits")
     }
+  }
+
+  test("the session checkpoint dir is set only by fitAlsGrid's temp anchor") {
+    // the dir is session-global: a second scoped override elsewhere
+    // would redirect every later checkpoint user while it runs
+    val hits = scalaFiles("src/main/scala")
+      .filter(Files.readString(_).contains("setCheckpointDir"))
+      .map(_.toString)
+    assert(hits == Seq("src/main/scala/graft/ml/Recsys.scala"),
+      s"setCheckpointDir in $hits")
   }
 
   test("oracle SQL never references fixture paths or engine internals") {
