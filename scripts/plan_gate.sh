@@ -12,8 +12,8 @@
 #             target/plan_shape_stamp.json via graft.PlanStamp
 #             (planning-only; ~1 min with the ML fits) — a leftover
 #             stamp is never reused. Pass an existing stamp path (e.g.
-#             target/plan_shape.json from the last full bench) to gate
-#             on it as-is; a nonexistent explicit path exits 2.
+#             a PlanStamp output written earlier) to gate on it as-is;
+#             a nonexistent explicit path exits 2.
 #
 # Intentional changes (a redesigned operator, a new query) make the diff
 # exit 1 BY DESIGN: adjudicate the printed lines, then commit the new
@@ -28,8 +28,7 @@ python3 scripts/test_plan_shape_diff.py
 BASELINE="${1:-$(ls plan_shape_r*.json | sort -V | tail -1)}"
 
 if [ -n "${2:-}" ]; then
-  # caller supplied a stamp (e.g. target/plan_shape.json from the last
-  # full bench) — gate on it as-is
+  # caller supplied a stamp (a PlanStamp output) — gate on it as-is
   NEW="$2"
 else
   # ALWAYS re-stamp the current binary (review r20 #1: reusing a

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Diff two plan-shape stamps (target/plan_shape.json or a committed
-plan_shape_r*.json): prints one line per query whose static plan shape
+"""Diff two plan-shape stamps (graft.PlanStamp output, e.g.
+target/plan_shape_stamp.json, or a committed plan_shape_r*.json): prints one line per query whose static plan shape
 changed — a new/lost shuffle Exchange, a gained/lost broadcast, or an
 operator falling out of whole-stage codegen — plus added/removed
 queries. Exit 1 iff any shape changed OR any query was removed (the

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session definition for every main ([[Bench]], [[PlanStamp]],
-  * [[Verify]], [[PlanLint]], [[Explain]], [[StreamDemo]],
-  * [[graft.ml.ReferenceAls]]) and the test harness, plus the between-runs
+  * [[Verify]], [[Explain]], [[StreamDemo]], [[graft.ml.ReferenceAls]])
+  * and the test harness, plus the between-runs
   * cache release. One definition because the configuration the oracle
   * checks (Verify) and the plans the gate stamps (PlanStamp) must be the
   * configuration that is benched.

@@ -853,8 +853,8 @@ object MiscQueries {
         // JSON-lines ingest with explicit schema + PERMISSIVE dirt
         // quarantine — the delivery format real crawl/training corpora
         // arrive in. Staged deterministically from the fixture (40 docs
-        // via to-JSON escaping shared with the bench artifacts'
-        // JsonEscape) plus 2 planted malformed lines, so the oracle
+        // written by the artifacts' one JSON writer, graft.Json) plus
+        // 2 planted malformed lines, so the oracle
         // recomputes every valid row from the documents table and pins
         // the corrupt count from the planting rule alone (the q86/q92
         // pattern). Two JSON-reader subtleties pinned here: PERMISSIVE
@@ -945,8 +945,8 @@ object MiscQueries {
     java.nio.file.Files.createDirectories(dir)
     val lines = Tables.documents(s, d).filter(col("doc_id") < 40)
       .select(col("doc_id"), col("text")).collect()
-      .map(r => s"""{"doc_id":${r.getLong(0)},"text":"${
-        JsonEscape.str(r.getString(1))}"}""").toSeq ++
+      .map(r => Json.write(scala.collection.immutable.ListMap(
+        "doc_id" -> r.getLong(0), "text" -> r.getString(1)))).toSeq ++
       Seq("""{"doc_id": 999""", "not json at all")
     java.nio.file.Files.write(dir.resolve("docs.jsonl"),
       String.join("\n", lines: _*)

@@ -1,10 +1,10 @@
 package graft
 
-/** The `SPARK_GRAFT_ONLY` env filter shared by the [[Verify]] and
-  * [[Bench]] mains (builder-side subset iteration; the driver never
-  * sets it). ONE parser for both so the contract cannot drift again:
-  * a typo'd name or a degenerate value ("" / ",," — e.g. an unset
-  * shell variable interpolated into the env) exits 2 with the
+/** The `SPARK_GRAFT_ONLY` env filter shared by the [[Verify]], [[Bench]]
+  * and [[PlanStamp]] mains (subset iteration during development; full
+  * runs never set it). ONE parser for all three so the contract cannot
+  * drift again: a typo'd name or a degenerate value ("" / ",," — e.g.
+  * an unset shell variable interpolated into the env) exits 2 with the
   * offending names printed — silently running a smaller (or empty)
   * scope would read as success to any exit-status gate. Pure (no
   * Spark): call BEFORE building the SparkSession so a bad filter

@@ -1,9 +1,6 @@
 package graft
 
-/** Dev diagnostic: print plan-quality findings for every registered
-  * non-ML query at sf0.001 — which plans contain CartesianProduct,
-  * BroadcastNestedLoopJoin, or a no-partition window. The enforced form
-  * lives in PlanLintSpec. */
+/** Plan-quality detectors that PlanLintSpec enforces over the registry. */
 object PlanLint {
 
   /** Window nodes whose partition spec is EMPTY — the single-task-window
@@ -26,26 +23,5 @@ object PlanLint {
         Seq("WindowGroupLimitExec")
     }.flatten
     here ++ plan.subqueriesAll.flatMap(emptyPartitionWindows)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = BenchSession.build(BenchSession.cpus)
-    QueryRegistry.all.filterNot(_.name.startsWith("qml")).foreach { q =>
-      try {
-        val exec = q.fn(spark, sf).queryExecution.executedPlan
-        val plan = exec.toString
-        val cart = plan.contains("CartesianProduct")
-        val bnlj = plan.contains("BroadcastNestedLoopJoin")
-        val gw = emptyPartitionWindows(exec)
-        if (cart || bnlj || gw.nonEmpty)
-          println(s"[planlint] ${q.name} cartesian=$cart bnlj=$bnlj " +
-            s"globalWindows=${gw.mkString(";")}")
-      } catch {
-        case e: Throwable =>
-          println(s"[planlint] ${q.name} ERROR ${e.getClass.getSimpleName}")
-      }
-    }
-    println("[planlint] done")
   }
 }

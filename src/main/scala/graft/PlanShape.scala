@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ListMap
 
-/** Per-query physical-plan SHAPE stamp (ADVICE r18 #7): a driver-visible
-  * `{query → {n_exchanges, has_broadcast, wholestage}}` JSON written next
-  * to `bench_out.json`, so round-over-round plan regressions — a lost
+/** Per-query physical-plan SHAPE stamp (ADVICE r18 #7): a
+  * `{query → {n_exchanges, has_broadcast, wholestage}}` JSON written by
+  * [[PlanStamp]], so round-over-round plan regressions — a lost
   * broadcast, a new shuffle, an operator falling out of whole-stage
   * codegen — are diffable from the artifacts alone instead of re-derived
   * by hand from `.explain` output each round.
@@ -56,9 +57,9 @@ object PlanShape {
     *
     * NOT reentrant/thread-safe (ADVICE r19): the toggle mutates the
     * session-global conf, so a query planned CONCURRENTLY in the same
-    * session during the capture window would plan with AQE off. Both
-    * callers (Bench, PlanStamp) are strictly sequential; keep it that
-    * way, or capture via a cloned `spark.newSession()` if a parallel
+    * session during the capture window would plan with AQE off. The
+    * callers (PlanStamp, PlanShapeSpec) are strictly sequential; keep it
+    * that way, or capture via a cloned `spark.newSession()` if a parallel
     * caller ever appears. */
   def of(df: DataFrame): Shape = {
     val spark = df.sparkSession
@@ -71,11 +72,10 @@ object PlanShape {
     finally spark.conf.set(key, old)
   }
 
-  /** One deterministic JSON object, queries sorted by name. Names are
-    * identifier-safe by construction (registry names), values numeric /
-    * boolean — no escaping needed. */
+  /** One deterministic JSON object, queries sorted by name. */
   def toJson(shapes: collection.Map[String, Shape]): String =
-    shapes.toSeq.sortBy(_._1).map { case (n, s) =>
-      s""""$n":{"n_exchanges":${s.nExchanges},"has_broadcast":${s.hasBroadcast},"wholestage":${s.wholestage}}"""
-    }.mkString("{", ",", "}")
+    Json.write(ListMap(shapes.toSeq.sortBy(_._1).map { case (n, s) =>
+      n -> ListMap("n_exchanges" -> s.nExchanges,
+        "has_broadcast" -> s.hasBroadcast, "wholestage" -> s.wholestage)
+    }: _*))
 }

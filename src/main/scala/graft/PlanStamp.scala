@@ -1,19 +1,17 @@
 package graft
 
 
-/** Standalone plan-shape stamp writer (VERDICT r19 #2): produces the same
-  * per-query `{n_exchanges, has_broadcast, wholestage}` JSON Bench emits,
-  * WITHOUT the timed runs — so the plan-regression gate
-  * (`scripts/plan_gate.sh`) can run standalone, not only as a by-product
-  * of a full bench. Building a query's DataFrame is planning-only for
-  * the relational registry; the eager queries execute while
+/** The plan-shape stamp writer: the per-query
+  * `{n_exchanges, has_broadcast, wholestage}` JSON ([[PlanShape]]) that
+  * the plan-regression gate (`scripts/plan_gate.sh`) diffs, produced
+  * without any timed run. Building a query's DataFrame is planning-only
+  * for the relational registry; the eager queries execute while
   * constructing their result relations — the ML-harness fits and
   * q106's bounded streaming run — so a full stamp costs roughly the
   * ML subtotal plus ~2 s (sf0.1), still far below a full bench. Their
   * stamped shape is the local result relation, not the inner
-  * fit/streaming topology (same convention as the bench stamp; the
-  * streaming topology is pinned by StreamParitySpec + the env-gated
-  * suites, not the plan gate).
+  * fit/streaming topology (the streaming topology is pinned by
+  * StreamParitySpec + the env-gated suites, not the plan gate).
   *
   * A query whose construction or capture throws is OMITTED from the
   * stamp — the diff then reports it as REMOVED and exits 1, so a
@@ -22,8 +20,7 @@ package graft
   * Usage: runMain graft.PlanStamp [sfDir] [outPath]
   * Defaults: sf0.1 (the scale the committed plan_shape_r*.json baselines
   * were captured at — broadcast decisions key on file-size stats, so the
-  * diff must compare same-scale stamps) and target/plan_shape_stamp.json
-  * (never the bench-owned target/plan_shape.json).
+  * diff must compare same-scale stamps) and target/plan_shape_stamp.json.
   */
 object PlanStamp {
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -24,10 +25,6 @@ object Verify {
     // the two can never drift.
     val attempted = SparkEntry.queries.keys.toSeq.sorted
       .filter(name => only.forall(_.contains(name)))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + JsonEscape.str(s) + "\""
     // Both scope-describing files are written BEFORE the query loop, and
     // any stale errors.json from a previous run in a reused outDir is
     // removed: an interrupted run then reads as missing-dump FAILs under
@@ -39,11 +36,9 @@ object Verify {
     // attempted.json declares which queries THIS run executed (errored
     // ones included — their dumps are absent, and a scope-aware compare
     // must still flag them, never skip them).
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/attempted.json"),
-      attempted.map(q).mkString("[", ",", "]"))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/attempted.json"), Json.write(attempted))
     Files.deleteIfExists(Paths.get(s"$outDir/errors.json"))
     // Also remove each attempted query's STALE dump dir up front: in a
     // reused outDir, an interrupted run must read as missing-dump FAILs
@@ -72,9 +67,8 @@ object Verify {
           BenchSession.releaseCaches(spark)
         }
     }
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      Json.write(ListMap(errors: _*)))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.map(_._1).mkString(", "))

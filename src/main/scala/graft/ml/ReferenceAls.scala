@@ -1,6 +1,7 @@
 package graft.ml
 
-import graft.{BenchSession, Tables}
+import graft.{BenchSession, Json, Tables}
+import scala.collection.immutable.ListMap
 
 /** Opt-in main running the reference's ALS tuning loop at its VERBATIM
   * configuration (reference `PySpark Scripts/bgrfunctions.py:182-191`):
@@ -30,11 +31,11 @@ object ReferenceAls {
     val r = Recsys.fitAlsGrid(Tables.ratings(spark, sfDir),
       "user_id", "item_id", "rating",
       ranks = Seq(20, 30), regParams = Seq(0.1, 0.01), maxIter = 20)
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    // sfDir is args/env-controlled — escape it like every other such
-    // string in a hand-built JSON line (ADVICE r12; graft.JsonEscape)
-    println(s"""{"best_rank":${r.bestRank},"best_reg_param":${r.bestRegParam},"rmse":${fmt(r.rmse)},"r2":${fmt(r.r2)},"grid":"rank{20,30} x reg{0.1,0.01}, maxIter=20, trainRatio=0.8","sf":"${graft.JsonEscape.str(sfDir)}"}""")
+    println(Json.write(ListMap[String, Any]("best_rank" -> r.bestRank,
+      "best_reg_param" -> r.bestRegParam,
+      "rmse" -> Json.decimal(r.rmse, 4), "r2" -> Json.decimal(r.r2, 4),
+      "grid" -> "rank{20,30} x reg{0.1,0.01}, maxIter=20, trainRatio=0.8",
+      "sf" -> sfDir, "cpus" -> BenchSession.cpus.toInt)))
     spark.stop()
   }
 }

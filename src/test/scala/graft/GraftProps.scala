@@ -200,15 +200,15 @@ object GraftProps extends Properties("graft") {
       }
     }
 
-  // Not a Spark job — pure string round-trip. Jackson (on the Spark
-  // classpath) is the independent reader standing in for the driver's
-  // json.load; lone surrogates are excluded from the generator because
-  // they are unrepresentable in any UTF-8 artifact to begin with.
-  // Paired surrogates ARE covered: the astral arm emits whole code
-  // points 0x10000–0x10FFFF via Character.toChars, and the upper-BMP
-  // arm covers 0xe000–0xfffd, so the full pass-through range of
-  // JsonEscape is exercised (not just chars below the surrogate gap).
-  property("JsonEscape: quoted escape round-trips through a JSON parser") =
+  // Not a Spark job — pure string round-trip. A plain ObjectMapper is
+  // the independent reader standing in for a consumer's json.load; lone
+  // surrogates are excluded from the generator because they are
+  // unrepresentable in any UTF-8 artifact to begin with. Paired
+  // surrogates ARE covered: the astral arm emits whole code points
+  // 0x10000–0x10FFFF via Character.toChars, and the upper-BMP arm covers
+  // 0xe000–0xfffd, so the writer's whole pass-through range is exercised
+  // (not just chars below the surrogate gap).
+  property("Json: a written string round-trips through a plain JSON parser") =
     forAll(Gen.listOf(Gen.frequency(
       3 -> Gen.asciiPrintableChar.map(_.toString),
       2 -> Gen.oneOf('"', '\\', '\n', '\r', '\t').map(_.toString),
@@ -218,7 +218,8 @@ object GraftProps extends Properties("graft") {
       1 -> Gen.choose(0x10000, 0x10ffff)
         .map(cp => new String(Character.toChars(cp))))).map(_.mkString)) { s =>
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      mapper.readValue("\"" + JsonEscape.str(s) + "\"", classOf[String]) == s
+      mapper.readValue(Json.write(Map("k" -> s)), classOf[java.util.Map[_, _]])
+        .get("k") == s
     }
 
   property("zOrderKey: de-interleaving recovers both ranks, key is z-monotone") =

@@ -38,6 +38,23 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("JSON artifacts have one writer") {
+    def filesWith(roots: Seq[String], pattern: String) = {
+      val re = pattern.r
+      roots.flatMap(scalaFiles)
+        .filter(f => re.findFirstIn(Files.readString(f)).isDefined)
+        .map(_.getFileName.toString)
+    }
+    // split literal, so this file does not match its own scan
+    val escaper = filesWith(Seq("src/main/scala", "src/test/scala"),
+      "Json" + "Escape")
+    assert(escaper.isEmpty, s"hand-built escaping in $escaper")
+    // `new ObjectMapper`, fully qualified or not, or a JsonMapper builder
+    val mappers = filesWith(Seq("src/main/scala"),
+      """new\s+[\w.]*(Object|Json)Mapper\b|JsonMapper\s*\.\s*builder""")
+    assert(mappers == Seq("Json.scala"), s"JSON mapper constructed in $mappers")
+  }
+
   test("the session checkpoint dir is set only by fitAlsGrid's temp anchor") {
     // the dir is session-global: a second scoped override elsewhere
     // would redirect every later checkpoint user while it runs
