@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
+import graft.ops.RelationalOps.{materialized, withMaterialized}
 
 /** Deduplication suite over the `documents` fixture (driver-gradeable
   * extensions beyond the reference surface). The fixture plants near-dup
@@ -245,32 +246,26 @@ object DedupQueries {
     GQuery("q97_dedup_consensus",
       (s, d) => {
         // Two dedup passes — exact Jaccard pairs AND minhash-LSH banding —
-        // composed over ONE caller-persisted shingle frame: the
-        // borrowMaterialized contract end-to-end (RelationalOps.scala:39).
-        // jaccardPairs sees the caller's cache, reuses it, and its release
-        // is a no-op (it must NOT drop blocks it didn't create), so the
-        // minhash pass that follows still scans the cache — at 100 TB the
-        // corpus is read and shingled ONCE for both passes instead of
-        // once per pass. Output: consensus pairs (flagged by both), the
-        // production triage shape — banding recall is probabilistic, so
-        // pairs confirmed by the exact path carry the Jaccard value.
+        // composed over ONE shingle frame persisted here: jaccardPairs
+        // runs on this cache and leaves it in place, so the minhash pass
+        // that follows still scans it — at 100 TB the corpus is read and
+        // shingled ONCE for both passes instead of once per pass. Output:
+        // consensus pairs (flagged by both), the production triage shape
+        // — banding recall is probabilistic, so pairs confirmed by the
+        // exact path carry the Jaccard value.
         val docs = Tables.documents(s, d)
-        val sh = graft.ops.RelationalOps.materialized(
-          Dedup.shingles(docs, "doc_id", "text", 3))
-        val jac = Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.5)
-          .select(col("id_a"), col("id_b"),
-            round(col("jaccard"), 6).as("jaccard"))
-        val mh = Dedup.minhashCandidates(
-          Dedup.minhashBuckets(Dedup.shingleIds(sh, useDictionaryIds = true),
-            "doc_id", numHashes = 16, rowsPerBand = 4),
-          "doc_id")
-        // materialize the consensus BEFORE releasing the shared shingle
-        // cache — the result is lazy and both inputs' lineages hang off sh
-        val out = graft.ops.RelationalOps.materialized(
-          jac.join(mh, Seq("id_a", "id_b")).orderBy("id_a", "id_b"))
-        sh.unpersist()
-        out
+        withMaterialized(Dedup.shingles(docs, "doc_id", "text", 3)) { sh =>
+          val jac = Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000L)
+            .filter(col("jaccard") >= 0.5)
+            .select(col("id_a"), col("id_b"),
+              round(col("jaccard"), 6).as("jaccard"))
+          val mh = Dedup.minhashCandidates(
+            Dedup.minhashBuckets(Dedup.shingleIds(sh, useDictionaryIds = true),
+              "doc_id", numHashes = 16, rowsPerBand = 4),
+            "doc_id")
+          materialized(
+            jac.join(mh, Seq("id_a", "id_b")).orderBy("id_a", "id_b"))
+        }
       },
       Some(s"""WITH $ShinglesCte
               |$PairsCte,
@@ -287,7 +282,7 @@ object DedupQueries {
               |SELECT jp.id_a, jp.id_b, jp.jaccard
               |FROM jp JOIN cand USING (id_a, id_b)
               |ORDER BY id_a, id_b""".stripMargin),
-      doc = "consensus dedup: exact-Jaccard AND minhash-LSH passes composed over ONE caller-persisted shingle frame — borrowMaterialized (RelationalOps.scala:39) reuses the caller's cache and releases nothing it didn't create, so the corpus is shingled once for both passes; oracle composes the q31 and q32 SQL from the SAME shared CTE definitions (PairsCte / minhashCtes — one source of truth)"),
+      doc = "consensus dedup: exact-Jaccard AND minhash-LSH passes composed over ONE shingle frame persisted by the query — RelationalOps.withMaterialized runs jaccardPairs on the query's cache and releases nothing it did not create, so the corpus is shingled once for both passes; oracle composes the q31 and q32 SQL from the SAME shared CTE definitions (PairsCte / minhashCtes — one source of truth)"),
 
     // ---- SimHash near-dup pairs -----------------------------------------
     GQuery("q33_dedup_simhash",

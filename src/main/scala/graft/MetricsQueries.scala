@@ -104,9 +104,9 @@ object MetricsQueries {
         // query's timed span).
         val groups = li.groupBy("score")
           .agg(sum(col("y")).as("npos_g"), count(lit(1)).as("n_g"))
-        val ps = RelationalOps.materialized(RelationalOps.zipWithPrefixSum(
-          groups, Seq(col("score")), "n_g", "cum_before"))
-        val (total, r) = try {
+        val (total, r) = RelationalOps.withMaterialized(
+            RelationalOps.zipWithPrefixSum(groups, Seq(col("score")), "n_g",
+              "cum_before")) { ps =>
           val total = ps.agg(sum(col("n_g"))).head().getLong(0)
           val med = RelationalOps.exactPercentileFromPrefix(
             ps, "score", "n_g", "cum_before", total, 0.5)
@@ -124,7 +124,7 @@ object MetricsQueries {
             sum(col("npos_g")).as("npos"),
             sum(col("n_g") - col("npos_g")).as("nneg")).head()
           (total, r)
-        } finally ps.unpersist()
+        }
         val spark = s
         import spark.implicits._
         Seq((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),

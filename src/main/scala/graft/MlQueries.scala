@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ml.{Classifiers, FeaturePipeline, Recsys}
+import graft.ops.RelationalOps.withMaterialized
 
 /** ML-layer queries (SURVEY.md §2.9). Since r20 EVERY entry here is
   * oracle-checked — a qml prefix does not imply a weaker check:
@@ -98,53 +99,49 @@ object MlQueries {
         // round + name join — still executes inside this plan.
         val spark = s
         import spark.implicits._
-        // persist the derivation once: it feeds the ALS fit (fitAls
-        // BORROWS a caller-held cache — borrowMaterialized contract),
-        // the known-users dim, and the totals agg; the whole output
-        // collapses to one driver row below, so the cache releases
-        // eagerly before return (the qml55/qml59 pattern) instead of
-        // leaking to a lazy consumer
-        val ratings = graft.ops.RelationalOps.materialized(
-          Tables.ratings(s, d))
-        val fit = Recsys.fitAls(ratings, "user_id", "item_id",
-          "rating", rank = 8, regParam = 0.1, maxIter = 5)
-        // J3 presentation join (reference als.py:48-49: attach the game
-        // Name to each recommendation): item dim broadcast
-        val names = Tables.part(s, d)
-          .select(col("p_partkey").as("item_id"), col("p_name").as("item_name"))
-        val recs = Recsys.recommendTopK(fit.model, k = 5)
-          .join(broadcast(names), Seq("item_id"), "left")
-          .select("user_id", "rank", "item_id", "item_name", "score")
-        val audited = rankedGroupAudit(recs, "user_id", k = 5,
-          extraAggs = Seq(sum(when(col("item_name").isNull, 1L)
-            .otherwise(0L)).as("unnamed")))
-        val known = ratings.select("user_id").distinct()
-          .withColumn("known", lit(1))
-        // coalesce: on an EMPTY recommendation frame the sums aggregate
-        // to NULL and the typed head() would throw. Zero-filling alone
-        // would be WORSE than the crash — (5, n, 0, 0, 0, 0) is exactly
-        // the oracle's pinned-zero row, so a recommender that recommends
-        // NOTHING would read green (review pass 3). The coverage claim
-        // below makes emptiness (and any silent-empty regression in the
-        // recommendTopK lineage) an explicit red: n_audited_users must
-        // reach a majority of the derivation's users — per-user dropout
-        // from the 0.8 train split is 0.2^n_ratings, so real coverage is
-        // ~100% and the ½ floor is distribution-safe.
-        val verdict = audited.join(known, Seq("user_id"), "left").agg(
-          count(lit(1)).as("n_audited_users"),
-          coalesce(sum(when(col("n") =!= 5 || !col("ranks_ok"), 1L)
-            .otherwise(0L)), lit(0L)).as("bad_rank_users"),
-          coalesce(sum(col("inversions")), lit(0L)).as("score_inversions"),
-          coalesce(sum(col("unnamed")), lit(0L)).as("n_unnamed"),
-          coalesce(sum(when(col("known").isNull, 1L).otherwise(0L)),
-            lit(0L)).as("n_unknown_users"))
-        val row = verdict.crossJoin( // 1×1
-            ratings.agg(countDistinct("user_id").as("n_users_total")))
-          .select(col("n_users_total"), col("n_audited_users"),
-            col("bad_rank_users"), col("score_inversions"),
-            col("n_unnamed"), col("n_unknown_users"))
-          .as[(Long, Long, Long, Long, Long, Long)].head()
-        ratings.unpersist()
+        // persist the derivation once: it feeds the ALS fit, the
+        // known-users dim, and the totals agg; the whole output collapses
+        // to one driver row below, so the cache releases before return
+        val row = withMaterialized(Tables.ratings(s, d)) { ratings =>
+          val fit = Recsys.fitAls(ratings, "user_id", "item_id",
+            "rating", rank = 8, regParam = 0.1, maxIter = 5)
+          // J3 presentation join (reference als.py:48-49: attach the game
+          // Name to each recommendation): item dim broadcast
+          val names = Tables.part(s, d)
+            .select(col("p_partkey").as("item_id"), col("p_name").as("item_name"))
+          val recs = Recsys.recommendTopK(fit.model, k = 5)
+            .join(broadcast(names), Seq("item_id"), "left")
+            .select("user_id", "rank", "item_id", "item_name", "score")
+          val audited = rankedGroupAudit(recs, "user_id", k = 5,
+            extraAggs = Seq(sum(when(col("item_name").isNull, 1L)
+              .otherwise(0L)).as("unnamed")))
+          val known = ratings.select("user_id").distinct()
+            .withColumn("known", lit(1))
+          // coalesce: on an EMPTY recommendation frame the sums aggregate
+          // to NULL and the typed head() would throw. Zero-filling alone
+          // would be WORSE than the crash — (5, n, 0, 0, 0, 0) is exactly
+          // the oracle's pinned-zero row, so a recommender that recommends
+          // NOTHING would read green (review pass 3). The coverage claim
+          // below makes emptiness (and any silent-empty regression in the
+          // recommendTopK lineage) an explicit red: n_audited_users must
+          // reach a majority of the derivation's users — per-user dropout
+          // from the 0.8 train split is 0.2^n_ratings, so real coverage is
+          // ~100% and the ½ floor is distribution-safe.
+          val verdict = audited.join(known, Seq("user_id"), "left").agg(
+            count(lit(1)).as("n_audited_users"),
+            coalesce(sum(when(col("n") =!= 5 || !col("ranks_ok"), 1L)
+              .otherwise(0L)), lit(0L)).as("bad_rank_users"),
+            coalesce(sum(col("inversions")), lit(0L)).as("score_inversions"),
+            coalesce(sum(col("unnamed")), lit(0L)).as("n_unnamed"),
+            coalesce(sum(when(col("known").isNull, 1L).otherwise(0L)),
+              lit(0L)).as("n_unknown_users"))
+          verdict.crossJoin( // 1×1
+              ratings.agg(countDistinct("user_id").as("n_users_total")))
+            .select(col("n_users_total"), col("n_audited_users"),
+              col("bad_rank_users"), col("score_inversions"),
+              col("n_unnamed"), col("n_unknown_users"))
+            .as[(Long, Long, Long, Long, Long, Long)].head()
+        }
         Seq((5, row._1, row._2 * 2 >= row._1 + 1, row._3, row._4,
             row._5, row._6))
           .toDF("k", "n_users_total", "coverage_ok", "bad_rank_users",
@@ -334,18 +331,19 @@ object MlQueries {
         // two variance aggregates, transform) — persist once; everything
         // below is collected to driver values, so the cache releases
         // before return (no lazy consumer, unlike qml52's output)
-        val e = graft.ops.RelationalOps.materialized(
+        val (ev, trace, projVar) = withMaterialized(
           Tables.embeddings(s, d).withColumn("features",
-            array_to_vector(col("embedding").cast("array<double>"))))
-        val model = FeaturePipeline.pcaModel(e, "features", "pca", k)
-        val ev = model.explainedVariance.toArray
-        val inVar = e.select(Summarizer.variance(col("features")).as("v"))
-          .select(vector_to_array(col("v"))).head().getSeq[Double](0)
-        val trace = inVar.sum
-        val projVar = model.transform(e)
-          .select(Summarizer.variance(col("pca")).as("v"))
-          .select(vector_to_array(col("v"))).head().getSeq[Double](0)
-        e.unpersist()
+            array_to_vector(col("embedding").cast("array<double>")))) { e =>
+          val model = FeaturePipeline.pcaModel(e, "features", "pca", k)
+          val ev = model.explainedVariance.toArray
+          val inVar = e.select(Summarizer.variance(col("features")).as("v"))
+            .select(vector_to_array(col("v"))).head().getSeq[Double](0)
+          val trace = inVar.sum
+          val projVar = model.transform(e)
+            .select(Summarizer.variance(col("pca")).as("v"))
+            .select(vector_to_array(col("v"))).head().getSeq[Double](0)
+          (ev, trace, projVar)
+        }
         ev.zipWithIndex.map { case (r, i) =>
           (i + 1, math.rint(trace * 1e6) / 1e6,
             math.abs(projVar(i) / trace - r) <= 1e-9,
@@ -373,29 +371,26 @@ object MlQueries {
         import spark.implicits._
         // persist once: four TVS grid harnesses otherwise re-run the
         // join + assemble + scaler-fit lineage for every grid point
-        // (the reference's own missing-cache problem, SURVEY §4.1)
-        val df = labeled(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // materialize the cache BEFORE the concurrent harnesses below:
-        // otherwise all four race to compute the same uncached lineage
-        // and each misses the others' in-flight blocks (duplicate work,
-        // not wrong results)
-        df.count()
-        // the four harnesses are INDEPENDENT eager evaluations over the
-        // same cached frame — run them as concurrent driver threads so
-        // each harness's straggler tail back-fills with the next
-        // harness's tasks (optimization guide §2.6: actions are only
-        // sequential because the driver calls them sequentially).
-        // Determinism is untouched: every split/fit is seeded per
-        // harness, nothing is shared but the immutable cached input, and
-        // the results Seq is assembled in declaration order regardless
-        // of completion order.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val results =
+        // (the reference's own missing-cache problem, SURVEY §4.1).
+        // Materialized BEFORE the concurrent harnesses below: otherwise
+        // all four race to compute the same uncached lineage and each
+        // misses the others' in-flight blocks (duplicate work, not
+        // wrong results)
+        val results = withMaterialized(labeled(s, d)) { df =>
+          // the four harnesses are INDEPENDENT eager evaluations over the
+          // same cached frame — run them as concurrent driver threads so
+          // each harness's straggler tail back-fills with the next
+          // harness's tasks (optimization guide §2.6: actions are only
+          // sequential because the driver calls them sequentially).
+          // Determinism is untouched: every split/fit is seeded per
+          // harness, nothing is shared but the immutable cached input, and
+          // the results Seq is assembled in declaration order regardless
+          // of completion order.
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.fromExecutor(pool)
           try Await.result(Future.sequence(Seq(
             Future(Classifiers.logistic(df, "scaled_features", "buckets")),
             Future(Classifiers.decisionTree(df, "scaled_features", "buckets")),
@@ -404,7 +399,7 @@ object MlQueries {
             Future(Classifiers.fmClassification(df, "scaled_features",
               "buckets", maxIter = 10)))), Duration.Inf)
           finally pool.shutdown()
-        df.unpersist()
+        }
         // Oracle-checked since r19 (was rows-only): the metric VALUES are
         // fitted-model outputs (and near-chance on this fixture — the
         // quantity bucket is independent of the price features by
@@ -475,19 +470,15 @@ object MlQueries {
         // rmse ≥ 0 / r² ≤ 1 are theorems, and n_rows is the bounded
         // sample size DuckDB recomputes as least(100000, derivation
         // count).
-        // persist before counting: the count materializes the cache the
-        // grid harness then BORROWS (fitAlsGrid's borrowMaterialized) —
-        // without it the derivation + global sort + limit would run once
-        // for the count and again for the fit
-        val bounded = Tables.ratings(s, d)
-          .orderBy("user_id", "item_id").limit(100000)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = bounded.count()
+        // persist once: without it the derivation + global sort + limit
+        // would run once for the count and again for the fit
         val ranks = Seq(8, 12)
         val regs = Seq(0.1, 0.01)
-        val r = Recsys.fitAlsGrid(bounded, "user_id", "item_id",
-          "rating", ranks = ranks, regParams = regs, maxIter = 5)
-        bounded.unpersist()
+        val (n, r) = withMaterialized(Tables.ratings(s, d)
+            .orderBy("user_id", "item_id").limit(100000)) { bounded =>
+          (bounded.count(), Recsys.fitAlsGrid(bounded, "user_id", "item_id",
+            "rating", ranks = ranks, regParams = regs, maxIter = 5))
+        }
         Seq((n, ranks.contains(r.bestRank), regs.contains(r.bestRegParam),
           r.rmse >= 0.0, r.r2 <= 1.0 + 1e-12))
           .toDF("n_rows", "best_rank_in_grid", "best_reg_in_grid",
@@ -515,31 +506,31 @@ object MlQueries {
         // index+encode the derived user/item ids (thousands of categories
         // at sf0.1), verify width == category count two independent ways —
         // sparse metadata (head vector) and a full-data max-index scan.
-        val ids = Tables.ratings(s, d)
+        val (stats, widths) = withMaterialized(Tables.ratings(s, d)
           .select(col("user_id").cast("string").as("user_id"),
-            col("item_id").cast("string").as("item_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val enc = FeaturePipeline.indexAndOneHot(ids,
-          Seq("user_id", "item_id"), dropLast = false)
-        // coalesce the maxes to -1 and take the head row as an Option:
-        // on an EMPTY encoded frame the raw NULL max would crash the
-        // typed decode and the bare head() would throw — -1 stats and
-        // -1 widths mismatch every oracle value instead, keeping
-        // emptiness red AND diagnosable (review pass 3's empty-frame
-        // class fix; zero-filling is never safe where 0-adjacent values
-        // could equal an oracle pin)
-        val stats = enc.agg(
-          countDistinct("user_id").as("u_n"),
-          countDistinct("item_id").as("i_n"),
-          coalesce(max("user_id_idx") + 1, lit(-1.0)).as("u_max"),
-          coalesce(max("item_id_idx") + 1, lit(-1.0)).as("i_max"))
-          .as[(Long, Long, Double, Double)].head()
-        val widths = enc.select("user_id_vec", "item_id_vec").head(1)
-          .headOption.map { h =>
-            (h.getAs[org.apache.spark.ml.linalg.Vector](0).size.toLong,
-              h.getAs[org.apache.spark.ml.linalg.Vector](1).size.toLong)
-          }.getOrElse((-1L, -1L))
-        ids.unpersist()
+            col("item_id").cast("string").as("item_id"))) { ids =>
+          val enc = FeaturePipeline.indexAndOneHot(ids,
+            Seq("user_id", "item_id"), dropLast = false)
+          // coalesce the maxes to -1 and take the head row as an Option:
+          // on an EMPTY encoded frame the raw NULL max would crash the
+          // typed decode and the bare head() would throw — -1 stats and
+          // -1 widths mismatch every oracle value instead, keeping
+          // emptiness red AND diagnosable (review pass 3's empty-frame
+          // class fix; zero-filling is never safe where 0-adjacent values
+          // could equal an oracle pin)
+          val stats = enc.agg(
+            countDistinct("user_id").as("u_n"),
+            countDistinct("item_id").as("i_n"),
+            coalesce(max("user_id_idx") + 1, lit(-1.0)).as("u_max"),
+            coalesce(max("item_id_idx") + 1, lit(-1.0)).as("i_max"))
+            .as[(Long, Long, Double, Double)].head()
+          val widths = enc.select("user_id_vec", "item_id_vec").head(1)
+            .headOption.map { h =>
+              (h.getAs[org.apache.spark.ml.linalg.Vector](0).size.toLong,
+                h.getAs[org.apache.spark.ml.linalg.Vector](1).size.toLong)
+            }.getOrElse((-1L, -1L))
+          (stats, widths)
+        }
         Seq(
           ("user_id", stats._1, stats._3.toLong, widths._1,
             stats._1 == widths._1 && stats._3.toLong == widths._1),
@@ -658,36 +649,35 @@ object MlQueries {
       (s, d) => {
         val spark = s
         import spark.implicits._
-        val df = labeled(s, d).persist()
-        val (fitted, reloaded) = Classifiers.saveLoadRoundtrip(df,
-          "scaled_features", "buckets",
-          Staging.dir("model", d))
-        // prediction parity between the in-memory and reloaded model:
-        // every row must agree (n_diff = 0). Joined on the labeled
-        // sample's content-hash uid — the fixture's (l_orderkey,
-        // l_linenumber) is not unique (see labeled()), so a join on it
-        // would cross-pair rows within duplicate keys
-        val a = fitted.transform(df)
-          .select(col("uid"), col("prediction").as("p1"))
-        val b = reloaded.transform(df)
-          .select(col("uid"), col("prediction").as("p2"))
-        val joined = a.join(b, Seq("uid"))
-        // materialize the 1-row comparison BEFORE unpersisting: the agg is
-        // lazy, and Bench/Verify execute it only after this fn returns —
-        // unpersisting first would recompute the whole labeled() lineage
-        // once per transform branch
-        // coalesce n_diff to -1 on an EMPTY joined frame: the raw NULL
-        // sum would crash the typed head() (undiagnosable red), and a
-        // zero-fill would EQUAL the oracle's n_diff=0 pin — -1 cannot,
-        // so emptiness stays red and diagnosable (n_rows=0 also
-        // mismatches the oracle's join count; review pass 3's
-        // empty-frame class fix)
-        val (nRows, nDiff) = joined.agg(
-          count(lit(1)).as("n_rows"),
-          coalesce(sum(when(col("p1") =!= col("p2"), 1L).otherwise(0L)),
-            lit(-1L)).as("n_diff"))
-          .as[(Long, Long)].head()
-        df.unpersist()
+        val (nRows, nDiff) = withMaterialized(labeled(s, d)) { df =>
+          val (fitted, reloaded) = Classifiers.saveLoadRoundtrip(df,
+            "scaled_features", "buckets",
+            Staging.dir("model", d))
+          // prediction parity between the in-memory and reloaded model:
+          // every row must agree (n_diff = 0). Joined on the labeled
+          // sample's content-hash uid — the fixture's (l_orderkey,
+          // l_linenumber) is not unique (see labeled()), so a join on it
+          // would cross-pair rows within duplicate keys
+          val a = fitted.transform(df)
+            .select(col("uid"), col("prediction").as("p1"))
+          val b = reloaded.transform(df)
+            .select(col("uid"), col("prediction").as("p2"))
+          val joined = a.join(b, Seq("uid"))
+          // collect the 1-row comparison INSIDE the cache's scope: the agg
+          // is lazy, and executed after the release it would recompute the
+          // whole labeled() lineage once per transform branch.
+          // Coalesce n_diff to -1 on an EMPTY joined frame: the raw NULL
+          // sum would crash the typed head() (undiagnosable red), and a
+          // zero-fill would EQUAL the oracle's n_diff=0 pin — -1 cannot,
+          // so emptiness stays red and diagnosable (n_rows=0 also
+          // mismatches the oracle's join count; review pass 3's
+          // empty-frame class fix)
+          joined.agg(
+            count(lit(1)).as("n_rows"),
+            coalesce(sum(when(col("p1") =!= col("p2"), 1L).otherwise(0L)),
+              lit(-1L)).as("n_diff"))
+            .as[(Long, Long)].head()
+        }
         Seq((nRows, nDiff)).toDF("n_rows", "n_diff")
       },
       // Oracle-checked since r18 (was rows-only): the model itself is not

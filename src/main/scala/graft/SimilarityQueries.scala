@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
+import graft.ops.RelationalOps.{materialized, withMaterialized}
 
 /** Similarity search over the `embeddings` fixture: brute-force exact
   * cosine as the correctness baseline, sign-LSH bucketed ANN as the scale
@@ -59,32 +60,30 @@ object SimilarityQueries {
         // side) — persist each once so the scan and the quantize/
         // dequantize transforms run once per row, not per consumer
         // (the house persist-shared-lineage pattern)
-        val emb = graft.ops.RelationalOps.materialized(
-          Tables.embeddings(s, d).select("vec_id", "embedding"))
-        val dq = graft.ops.RelationalOps.materialized(
-          Similarity.quantizeInt8(emb, "embedding")
-            .select(col("vec_id"),
-              Similarity.dequantizeInt8(col("q8"), col("q8_scale"))
-                .as("embedding")))
-        val exact = Similarity
-          .cosineTopK(emb.filter(col("vec_id") < 20), emb, "vec_id",
-            "embedding", k = 1)
-          .select(col("query_id"), col("neighbor_id").as("exact_nn"))
-        val approx = Similarity
-          .cosineTopK(dq.filter(col("vec_id") < 20), dq, "vec_id",
-            "embedding", k = 1)
-          .select(col("query_id"), col("neighbor_id").as("q8_nn"))
-        val out = graft.ops.RelationalOps.materialized(
-          exact.join(approx, Seq("query_id"))
-            .agg(count(lit(1)).as("n_queries"),
-              sum(when(col("exact_nn") === col("q8_nn"), 1L).otherwise(0L))
-                .as("agree"))
-            .select(col("n_queries"),
-              (col("agree").cast("double") >=
-                col("n_queries").cast("double") * 0.9).as("recall_ok")))
-        emb.unpersist()
-        dq.unpersist()
-        out
+        withMaterialized(
+            Tables.embeddings(s, d).select("vec_id", "embedding")) { emb =>
+          withMaterialized(Similarity.quantizeInt8(emb, "embedding")
+              .select(col("vec_id"),
+                Similarity.dequantizeInt8(col("q8"), col("q8_scale"))
+                  .as("embedding"))) { dq =>
+            val exact = Similarity
+              .cosineTopK(emb.filter(col("vec_id") < 20), emb, "vec_id",
+                "embedding", k = 1)
+              .select(col("query_id"), col("neighbor_id").as("exact_nn"))
+            val approx = Similarity
+              .cosineTopK(dq.filter(col("vec_id") < 20), dq, "vec_id",
+                "embedding", k = 1)
+              .select(col("query_id"), col("neighbor_id").as("q8_nn"))
+            materialized(
+              exact.join(approx, Seq("query_id"))
+                .agg(count(lit(1)).as("n_queries"),
+                  sum(when(col("exact_nn") === col("q8_nn"), 1L).otherwise(0L))
+                    .as("agree"))
+                .select(col("n_queries"),
+                  (col("agree").cast("double") >=
+                    col("n_queries").cast("double") * 0.9).as("recall_ok")))
+          }
+        }
       },
       Some("""SELECT count(*) AS n_queries, TRUE AS recall_ok
              |FROM embeddings WHERE vec_id < 20""".stripMargin),
@@ -105,28 +104,27 @@ object SimilarityQueries {
         // 0.69/0.71 — the accuracy/cost dial made visible; the fixture's
         // label clusters are noisy enough that recall, not speed, is
         // what bounds the probe count here.)
-        val emb = graft.ops.RelationalOps.materialized(
-          Tables.embeddings(s, d).select("vec_id", "embedding"))
-        val exact = Similarity
-          .cosineTopK(emb.filter(col("vec_id") < 20), emb, "vec_id",
-            "embedding", k = 5)
-          .select(col("query_id"), col("neighbor_id"))
-        val ivf = Similarity
-          .ivfTopK(emb, "vec_id", "embedding",
-            queryPred = col("vec_id") < 20, nLists = 16, nProbe = 8, k = 5)
-          .select(col("query_id"), col("neighbor_id"))
-        val out = graft.ops.RelationalOps.materialized(
-          exact.join(ivf.withColumn("__hit", lit(1L)),
-              Seq("query_id", "neighbor_id"), "left")
-            .groupBy("query_id")
-            .agg((sum(coalesce(col("__hit"), lit(0L))).cast("double") /
-              count(lit(1))).as("recall"))
-            .agg(count(lit(1)).as("n_queries"),
-              avg(col("recall")).as("mean_recall"))
-            .select(col("n_queries"),
-              (col("mean_recall") >= 0.75).as("recall_ok")))
-        emb.unpersist()
-        out
+        withMaterialized(
+            Tables.embeddings(s, d).select("vec_id", "embedding")) { emb =>
+          val exact = Similarity
+            .cosineTopK(emb.filter(col("vec_id") < 20), emb, "vec_id",
+              "embedding", k = 5)
+            .select(col("query_id"), col("neighbor_id"))
+          val ivf = Similarity
+            .ivfTopK(emb, "vec_id", "embedding",
+              queryPred = col("vec_id") < 20, nLists = 16, nProbe = 8, k = 5)
+            .select(col("query_id"), col("neighbor_id"))
+          materialized(
+            exact.join(ivf.withColumn("__hit", lit(1L)),
+                Seq("query_id", "neighbor_id"), "left")
+              .groupBy("query_id")
+              .agg((sum(coalesce(col("__hit"), lit(0L))).cast("double") /
+                count(lit(1))).as("recall"))
+              .agg(count(lit(1)).as("n_queries"),
+                avg(col("recall")).as("mean_recall"))
+              .select(col("n_queries"),
+                (col("mean_recall") >= 0.75).as("recall_ok")))
+        }
       },
       Some("""SELECT count(*) AS n_queries, TRUE AS recall_ok
              |FROM embeddings WHERE vec_id < 20""".stripMargin),

@@ -121,11 +121,7 @@ object WindowQueries {
         // unique per (key, time): required for a deterministic match
         val views = e.filter(col("event_type") === "view")
           .groupBy("user_id", "ts").agg(max("value").as("vval"))
-        // finite hotKeyThreshold arms the window-skew guard: a user with
-        // > 100k events would be time-range-split instead of funneling
-        // through one window task (no-op at fixture scale, same result)
-        RelationalOps.asOfJoin(clicks, views, "user_id", "ts",
-          hotKeyThreshold = 100000L)
+        RelationalOps.asOfJoin(clicks, views, "user_id", "ts")
           .select(col("event_id"),
             round(col("value") * 100, 0).cast("long").as("click_cents"),
             round(coalesce(col("asof.vval"), lit(0.0)) * 100, 0).cast("long")

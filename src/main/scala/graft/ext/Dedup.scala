@@ -94,41 +94,36 @@ object Dedup {
     * Output: (id_a, id_b, common, n_a, n_b) with id_a < id_b. */
   def jaccardPairs(sh: DataFrame, idCol: String,
                    maxDf: Long = 1000L): DataFrame = {
-    // The shingle frame fans out four ways (sizes, stop list, both join
-    // sides): persist it once — unpersisted, the shingling lineage (at
-    // 100 TB: the full corpus scan) re-runs per consumer. Borrowed, not
-    // taken: if the CALLER already persisted sh (to reuse it across
-    // several dedup passes), their cache is reused and left intact —
-    // an unconditional persist/unpersist here would silently drop it.
-    val (s, releaseS) = RelationalOps.borrowMaterialized(sh)
-    val sizes = s.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    // The STOP list (df > maxDf) is tiny by construction — boilerplate
-    // shingles are few in distinct count — so an anti join against it is
-    // broadcast-eligible and the full shingle set is NOT re-shuffled
-    // (a semi join on the huge keep-list would shuffle everything twice).
-    val stop = s.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select("shingle")
-    val pruned = s.join(stop, Seq("shingle"), "left_anti")
-    val a = pruned.select(col(idCol).as("id_a"), col("shingle"))
-    val b = pruned.select(col(idCol).as("id_b"), col("shingle"))
-    // SHUFFLE_HASH hint: post-explode size estimates are far below real
-    // cardinality, so Catalyst would otherwise BROADCAST the whole b-side
-    // shingle set (observed at sf0.1) — a driver OOM at scale. Hinting
-    // forces a shuffled hash join partitioned by shingle; both sides are
-    // identical subplans, so the exchange is reused.
-    val out = RelationalOps.materialized(
-      a.join(b.hint("shuffle_hash"), Seq("shingle"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-        .join(sizes.withColumnRenamed(idCol, "id_a")
-          .withColumnRenamed("n_sh", "n_a"), Seq("id_a"))
-        .join(sizes.withColumnRenamed(idCol, "id_b")
-          .withColumnRenamed("n_sh", "n_b"), Seq("id_b"))
-        .withColumn("jaccard",
-          col("common").cast("double") /
-            (col("n_a") + col("n_b") - col("common"))))
-    releaseS()
-    out
+    // the shingle frame fans out four ways (sizes, stop list, both join
+    // sides): persist it once
+    RelationalOps.withMaterialized(sh) { s =>
+      val sizes = s.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
+      // The STOP list (df > maxDf) is tiny by construction — boilerplate
+      // shingles are few in distinct count — so an anti join against it is
+      // broadcast-eligible and the full shingle set is NOT re-shuffled
+      // (a semi join on the huge keep-list would shuffle everything twice).
+      val stop = s.groupBy("shingle").agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxDf).select("shingle")
+      val pruned = s.join(stop, Seq("shingle"), "left_anti")
+      val a = pruned.select(col(idCol).as("id_a"), col("shingle"))
+      val b = pruned.select(col(idCol).as("id_b"), col("shingle"))
+      // SHUFFLE_HASH hint: post-explode size estimates are far below real
+      // cardinality, so Catalyst would otherwise BROADCAST the whole b-side
+      // shingle set (observed at sf0.1) — a driver OOM at scale. Hinting
+      // forces a shuffled hash join partitioned by shingle; both sides are
+      // identical subplans, so the exchange is reused.
+      RelationalOps.materialized(
+        a.join(b.hint("shuffle_hash"), Seq("shingle"))
+          .filter(col("id_a") < col("id_b"))
+          .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
+          .join(sizes.withColumnRenamed(idCol, "id_a")
+            .withColumnRenamed("n_sh", "n_a"), Seq("id_a"))
+          .join(sizes.withColumnRenamed(idCol, "id_b")
+            .withColumnRenamed("n_sh", "n_b"), Seq("id_b"))
+          .withColumn("jaccard",
+            col("common").cast("double") /
+              (col("n_a") + col("n_b") - col("common"))))
+    }
   }
 
   /** Shingle → integer id. Dictionary path: rank-by-sort (deterministic in
@@ -305,22 +300,19 @@ object Dedup {
     * runs exactly once, not once per consumer. */
   def minhashCandidates(buckets: DataFrame, idCol: String,
                         maxBucketSize: Int = 1000): DataFrame = {
-    // borrowed, not taken: a caller-held cache on `buckets` is reused
-    // and left intact (see jaccardPairs)
-    val (bk, releaseBk) = RelationalOps.borrowMaterialized(buckets)
-    val sized = bk.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= maxBucketSize && col("bsz") > 1)
-    val b = bk.join(sized.select("band", "bucket"), Seq("band", "bucket"))
-    val out = RelationalOps.materialized(
-      b.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-        .join(b.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-          .hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
-          Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct())
-    releaseBk()
-    out
+    RelationalOps.withMaterialized(buckets) { bk =>
+      val sized = bk.groupBy("band", "bucket")
+        .agg(count(lit(1)).as("bsz"))
+        .filter(col("bsz") <= maxBucketSize && col("bsz") > 1)
+      val b = bk.join(sized.select("band", "bucket"), Seq("band", "bucket"))
+      RelationalOps.materialized(
+        b.select(col("band"), col("bucket"), col(idCol).as("id_a"))
+          .join(b.select(col("band"), col("bucket"), col(idCol).as("id_b"))
+            .hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
+            Seq("band", "bucket"))
+          .filter(col("id_a") < col("id_b"))
+          .select("id_a", "id_b").distinct())
+    }
   }
 
 
@@ -349,34 +341,31 @@ object Dedup {
                             idCol: String,
                             maxBucketSize: Int = 1000): DataFrame = {
     // two consumers of the corpus lineage (the size aggregation + the
-    // anti-join probe side): borrow-persist the CALLER's frame — not a
-    // local projection of it, which would never match a caller-held
-    // cache — so the expensive index lineage runs once, not twice, and
-    // a cache held across several probe batches is reused intact (the
-    // jaccardPairs convention)
-    val (cached, releaseC) = RelationalOps.borrowMaterialized(corpusBuckets)
-    val corpus = cached
-      .select(col("band"), col("bucket"), col(idCol).as("old_id"))
-    // the OVERSIZED-bucket list is tiny by construction (boilerplate
-    // buckets are few in distinct count), so the anti join is
-    // broadcast-eligible; deliberately UNHINTED — AQE converts from
-    // runtime stats when the list is genuinely tiny, and a degenerate
-    // cap that inflates it degrades to a shuffled anti join instead of
-    // a forced driver collect (the trimLowImportance / jaccardPairs
-    // convention). The size aggregation itself shuffles bucket-key
-    // partials once; a production deploy precomputes bucket sizes at
-    // index-build time and skips that pass entirely.
-    val stop = corpus.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucketSize)
-      .select("band", "bucket")
-    val out = RelationalOps.materialized(
-      corpus.join(stop, Seq("band", "bucket"), "left_anti")
-        .join(broadcast(batchBuckets.select(col("band"), col("bucket"),
-          col(idCol).as("new_id"))), Seq("band", "bucket"))
-        .select(col("new_id"), col("old_id")).distinct())
-    releaseC()
-    out
+    // anti-join probe side): persist the CALLER's frame — not a local
+    // projection of it, which would never match a caller-held cache — so
+    // the expensive index lineage runs once, not twice
+    RelationalOps.withMaterialized(corpusBuckets) { cached =>
+      val corpus = cached
+        .select(col("band"), col("bucket"), col(idCol).as("old_id"))
+      // the OVERSIZED-bucket list is tiny by construction (boilerplate
+      // buckets are few in distinct count), so the anti join is
+      // broadcast-eligible; deliberately UNHINTED — AQE converts from
+      // runtime stats when the list is genuinely tiny, and a degenerate
+      // cap that inflates it degrades to a shuffled anti join instead of
+      // a forced driver collect (the trimLowImportance / jaccardPairs
+      // convention). The size aggregation itself shuffles bucket-key
+      // partials once; a production deploy precomputes bucket sizes at
+      // index-build time and skips that pass entirely.
+      val stop = corpus.groupBy("band", "bucket")
+        .agg(count(lit(1)).as("bsz"))
+        .filter(col("bsz") > maxBucketSize)
+        .select("band", "bucket")
+      RelationalOps.materialized(
+        corpus.join(stop, Seq("band", "bucket"), "left_anti")
+          .join(broadcast(batchBuckets.select(col("band"), col("bucket"),
+            col(idCol).as("new_id"))), Seq("band", "bucket"))
+          .select(col("new_id"), col("old_id")).distinct())
+    }
   }
 
   /** 16-bit SimHash from per-doc distinct token ids: bit b of token t is
@@ -431,23 +420,22 @@ object Dedup {
     }: _*)
     // persist the segmented frame: both self-join sides consume it, and
     // its lineage (tokens → dictionary → signature) must run once, not twice
-    val banded = RelationalOps.materialized(
+    RelationalOps.withMaterialized(
       sh.select(col(idCol), col("simhash"),
-        posexplode(segVals).as(Seq("seg", "segval"))))
-    val a = banded.select(col("seg"), col("segval"),
-      col(idCol).as("id_a"), col("simhash").as("sh_a"))
-    val b = banded.select(col("seg"), col("segval"),
-      col(idCol).as("id_b"), col("simhash").as("sh_b"))
-    val out = RelationalOps.materialized(
-      a.join(b.hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
-          Seq("seg", "segval"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b").distinct()
-        .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
-        .filter(col("hamming") <= maxHamming)
-        .select("id_a", "id_b", "hamming"))
-    banded.unpersist()
-    out
+        posexplode(segVals).as(Seq("seg", "segval")))) { banded =>
+      val a = banded.select(col("seg"), col("segval"),
+        col(idCol).as("id_a"), col("simhash").as("sh_a"))
+      val b = banded.select(col("seg"), col("segval"),
+        col(idCol).as("id_b"), col("simhash").as("sh_b"))
+      RelationalOps.materialized(
+        a.join(b.hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
+            Seq("seg", "segval"))
+          .filter(col("id_a") < col("id_b"))
+          .select("id_a", "id_b", "sh_a", "sh_b").distinct()
+          .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
+          .filter(col("hamming") <= maxHamming)
+          .select("id_a", "id_b", "hamming"))
+    }
   }
 
   /** Connected components over an undirected edge list — the clustering
@@ -475,57 +463,57 @@ object Dedup {
   def connectedComponents(edges: DataFrame, a: String, b: String,
                           maxIter: Int = 25): DataFrame = {
     val spark = edges.sparkSession
-    val sym = RelationalOps.materialized(
+    RelationalOps.withMaterialized(
       edges.select(col(a).as("src"), col(b).as("dst"))
         .union(edges.select(col(b).as("src"), col(a).as("dst")))
-        .distinct())
-    val seed = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    // lazy: the first round's job materializes these blocks
-    var labelsRdd = seed.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = spark.createDataFrame(labelsRdd, seed.schema)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym.join(labels, col("src") === col("id"))
-        .groupBy(col("dst"))
-        .agg(min(col("label")).as("nbr"))
-      // ONE action per round: the step frame carries a per-row "label
-      // shrank" flag, and the same job that materializes the next label
-      // table tallies the flags through an accumulator — no separate
-      // convergence probe (which used to cost a second pass over the
-      // labels each round). A task retry can only over-count the
-      // accumulator, so a spurious non-zero costs at most one extra
-      // round; a zero is exact, so convergence is never declared early.
-      val stepped = labels
-        .join(nbrMin, col("id") === col("dst"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nbr"),
-          col("label"))).as("label"),
-          (coalesce(col("nbr"), col("label")) < col("label"))
-            .as("__changed"))
-      val acc = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
-      val nextRdd = stepped.rdd.map { row =>
-        if (row.getBoolean(2)) acc.add(1L)
-        org.apache.spark.sql.Row(row.get(0), row.get(1))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      nextRdd.count()
-      converged = acc.value == 0L
-      labelsRdd.unpersist(blocking = false)
-      labels = spark.createDataFrame(nextRdd, labels.schema)
-      labelsRdd = nextRdd
-      iter += 1
+        .distinct()) { sym =>
+      val seed = sym.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))
+      // lazy: the first round's job materializes these blocks
+      var labelsRdd = seed.rdd.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var labels = spark.createDataFrame(labelsRdd, seed.schema)
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val nbrMin = sym.join(labels, col("src") === col("id"))
+          .groupBy(col("dst"))
+          .agg(min(col("label")).as("nbr"))
+        // ONE action per round: the step frame carries a per-row "label
+        // shrank" flag, and the same job that materializes the next label
+        // table tallies the flags through an accumulator — no separate
+        // convergence probe (which used to cost a second pass over the
+        // labels each round). A task retry can only over-count the
+        // accumulator, so a spurious non-zero costs at most one extra
+        // round; a zero is exact, so convergence is never declared early.
+        val stepped = labels
+          .join(nbrMin, col("id") === col("dst"), "left")
+          .select(col("id"), least(col("label"), coalesce(col("nbr"),
+            col("label"))).as("label"),
+            (coalesce(col("nbr"), col("label")) < col("label"))
+              .as("__changed"))
+        val acc = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
+        val nextRdd = stepped.rdd.map { row =>
+          if (row.getBoolean(2)) acc.add(1L)
+          org.apache.spark.sql.Row(row.get(0), row.get(1))
+        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        nextRdd.count()
+        converged = acc.value == 0L
+        labelsRdd.unpersist(blocking = false)
+        labels = spark.createDataFrame(nextRdd, labels.schema)
+        labelsRdd = nextRdd
+        iter += 1
+      }
+      // real dup graphs converge in a handful of rounds, so hitting this
+      // means the graph has a pathological long path (raise maxIter).
+      // Release the final round's label blocks before throwing — the
+      // caller never receives a handle to them.
+      if (!converged) {
+        labelsRdd.unpersist(blocking = false)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds")
+      }
+      labels
     }
-    sym.unpersist()
-    // real dup graphs converge in a handful of rounds, so hitting this
-    // means the graph has a pathological long path (raise maxIter).
-    // Release the final round's label blocks before throwing — the
-    // caller never receives a handle to them.
-    if (!converged) {
-      labelsRdd.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
-    }
-    labels
   }
 }

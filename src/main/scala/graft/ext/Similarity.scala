@@ -104,31 +104,31 @@ object Similarity {
     // feeds the size count and both candidate self-join sides — persist
     // each once so the hyperplane hashing (O(bands·bits·dims) per row)
     // and the source scan run once, not per consumer.
-    val e = df.select(col(idCol), asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = RelationalOps.materialized(
-      e.select(col(idCol),
-        posexplode(lshBandBuckets(col("v"), dims, bands, bitsPerBand))
-          .as(Seq("band", "bucket"))))
-    val sized = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
-    val b2 = banded.join(sized.select("band", "bucket"), Seq("band", "bucket"))
-    val cand = b2.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-      .join(b2.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-        .hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val out = RelationalOps.materialized(cand
-      .join(e.select(col(idCol).as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(e.select(col(idCol).as("id_b"), col("v").as("vb")), Seq("id_b"))
-      .withColumn("cos_sim", round(cosine(col("va"), col("vb")), 6))
-      .filter(col("cos_sim") >= threshold)
-      .select("id_a", "id_b", "cos_sim"))
-    banded.unpersist()
-    e.unpersist()
-    out
+    RelationalOps.withMaterialized(
+      df.select(col(idCol), asDouble(col(vecCol)).as("v"))) { e =>
+      RelationalOps.withMaterialized(
+        e.select(col(idCol),
+          posexplode(lshBandBuckets(col("v"), dims, bands, bitsPerBand))
+            .as(Seq("band", "bucket")))) { banded =>
+        val sized = banded.groupBy("band", "bucket")
+          .agg(count(lit(1)).as("bsz"))
+          .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
+        val b2 = banded.join(sized.select("band", "bucket"),
+          Seq("band", "bucket"))
+        val cand = b2.select(col("band"), col("bucket"), col(idCol).as("id_a"))
+          .join(b2.select(col("band"), col("bucket"), col(idCol).as("id_b"))
+            .hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
+            Seq("band", "bucket"))
+          .filter(col("id_a") < col("id_b"))
+          .select("id_a", "id_b").distinct()
+        RelationalOps.materialized(cand
+          .join(e.select(col(idCol).as("id_a"), col("v").as("va")), Seq("id_a"))
+          .join(e.select(col(idCol).as("id_b"), col("v").as("vb")), Seq("id_b"))
+          .withColumn("cos_sim", round(cosine(col("va"), col("vb")), 6))
+          .filter(col("cos_sim") >= threshold)
+          .select("id_a", "id_b", "cos_sim"))
+      }
+    }
   }
 
   /** ANN: exact cosine top-k, but only within sign-LSH buckets. Recall is
@@ -143,24 +143,23 @@ object Similarity {
     // persist the bucketed frame: the size count and both in-bucket join
     // sides consume it — the hyperplane hashing must run once per row,
     // not once per consumer
-    val e = RelationalOps.materialized(
+    RelationalOps.withMaterialized(
       df.select(col(idCol), asDouble(col(vecCol)).as("v"))
-        .withColumn("bucket", lshBucketInt(col("v"), dims, nBits)))
-    val sized = e.groupBy("bucket").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
-    val eb = e.join(sized.select("bucket"), Seq("bucket"))
-    val a = eb.select(col("bucket"), col(idCol).as("query_id"), col("v").as("qv"))
-    val b = eb.select(col("bucket"), col(idCol).as("neighbor_id"), col("v").as("xv"))
-    val scored = a.join(b.hint("shuffle_hash"), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("qv"), col("xv")), 6))
-      .select("bucket", "query_id", "neighbor_id", "score")
-    val out = RelationalOps.materialized(RelationalOps.topKPerGroup(scored,
-      part = Seq(col("query_id")),
-      order = Seq(col("score").desc, col("neighbor_id").asc),
-      k = k, rankCol = "rank"))
-    e.unpersist()
-    out
+        .withColumn("bucket", lshBucketInt(col("v"), dims, nBits))) { e =>
+      val sized = e.groupBy("bucket").agg(count(lit(1)).as("bsz"))
+        .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
+      val eb = e.join(sized.select("bucket"), Seq("bucket"))
+      val a = eb.select(col("bucket"), col(idCol).as("query_id"), col("v").as("qv"))
+      val b = eb.select(col("bucket"), col(idCol).as("neighbor_id"), col("v").as("xv"))
+      val scored = a.join(b.hint("shuffle_hash"), Seq("bucket"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("score", round(cosine(col("qv"), col("xv")), 6))
+        .select("bucket", "query_id", "neighbor_id", "score")
+      RelationalOps.materialized(RelationalOps.topKPerGroup(scored,
+        part = Seq(col("query_id")),
+        order = Seq(col("score").desc, col("neighbor_id").asc),
+        k = k, rankCol = "rank"))
+    }
   }
 
   /** IVF (inverted-file) ANN — the centroid-partitioned scale path, the
@@ -180,43 +179,42 @@ object Similarity {
     import org.apache.spark.ml.functions.array_to_vector
     // persist `e`: the iterative KMeans fit and the assignment transform
     // both consume the array→vector conversion lineage
-    val e = RelationalOps.materialized(
+    RelationalOps.withMaterialized(
       df.select(col(idCol), asDouble(col(vecCol)).as("v"))
-        .withColumn("features", array_to_vector(col("v"))))
-    val model = new KMeans().setK(nLists).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("cell").fit(e)
-    // persist `assigned`: the probe ranking and the in-cell scoring join
-    // are independent consumers of the cell assignment
-    val assigned = RelationalOps.materialized(model.transform(e)
-      .select(col(idCol), col("v"), col("cell")))
-    e.unpersist()
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cents = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq.toDF("cell", "cent")
-    // probe ranking: squared L2 distance query→centroid (KMeans metric)
-    val dist2 = aggregate(
-      zip_with(col("qv"), col("cent"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-    val probes = RelationalOps.topKPerGroup(
-      assigned.filter(queryPred)
-        .select(col(idCol).as("query_id"), col("v").as("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("d2", dist2),
-      part = Seq(col("query_id")),
-      order = Seq(col("d2").asc, col("cell").asc),
-      k = nProbe, rankCol = "probe_rank")
-      .select("query_id", "qv", "cell")
-    val scored = probes.join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col(idCol))
-      .withColumn("score", round(cosine(col("qv"), col("v")), 6))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("score"))
-    val out = RelationalOps.materialized(RelationalOps.topKPerGroup(scored,
-      part = Seq(col("query_id")),
-      order = Seq(col("score").desc, col("neighbor_id").asc),
-      k = k, rankCol = "rank"))
-    assigned.unpersist()
-    out
+        .withColumn("features", array_to_vector(col("v")))) { e =>
+      val model = new KMeans().setK(nLists).setSeed(seed)
+        .setFeaturesCol("features").setPredictionCol("cell").fit(e)
+      // persist `assigned`: the probe ranking and the in-cell scoring join
+      // are independent consumers of the cell assignment
+      RelationalOps.withMaterialized(model.transform(e)
+        .select(col(idCol), col("v"), col("cell"))) { assigned =>
+        val spark = df.sparkSession
+        import spark.implicits._
+        val cents = model.clusterCenters.zipWithIndex
+          .map { case (c, i) => (i, c.toArray) }.toSeq.toDF("cell", "cent")
+        // probe ranking: squared L2 distance query→centroid (KMeans metric)
+        val dist2 = aggregate(
+          zip_with(col("qv"), col("cent"), (x, y) => (x - y) * (x - y)),
+          lit(0.0), (acc, x) => acc + x)
+        val probes = RelationalOps.topKPerGroup(
+          assigned.filter(queryPred)
+            .select(col(idCol).as("query_id"), col("v").as("qv"))
+            .crossJoin(broadcast(cents))
+            .withColumn("d2", dist2),
+          part = Seq(col("query_id")),
+          order = Seq(col("d2").asc, col("cell").asc),
+          k = nProbe, rankCol = "probe_rank")
+          .select("query_id", "qv", "cell")
+        val scored = probes.join(assigned, Seq("cell"))
+          .filter(col("query_id") =!= col(idCol))
+          .withColumn("score", round(cosine(col("qv"), col("v")), 6))
+          .select(col("query_id"), col(idCol).as("neighbor_id"), col("score"))
+        RelationalOps.materialized(RelationalOps.topKPerGroup(scored,
+          part = Seq(col("query_id")),
+          order = Seq(col("score").desc, col("neighbor_id").asc),
+          k = k, rankCol = "rank"))
+      }
+    }
   }
 
   /** Sign of deterministic hyperplane `j` (global plane index) applied to

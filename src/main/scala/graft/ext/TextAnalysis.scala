@@ -184,43 +184,40 @@ object TextAnalysis {
     val starts = when(size(toks) >= 2, sequence(lit(1), size(toks) - 1))
       .otherwise(array().cast("array<int>"))
     // the bigram stream fans out two ways (the c2 aggregation + the
-    // scoring join's probe side): persist it once — borrowed, not
-    // taken, so a caller-held cache is reused and left intact (the
-    // jaccardPairs convention)
-    val (bi, releaseBi) = RelationalOps.borrowMaterialized(
+    // scoring join's probe side): persist it once
+    RelationalOps.withMaterialized(
       toked.select(col(idCol),
           explode(transform(starts,
             i => struct(element_at(toks, i).as("a"),
               element_at(toks, i + 1).as("b")))).as("bg"))
-        .select(col(idCol), col("bg.a").as("a"), col("bg.b").as("b")))
-    val c2 = bi.groupBy("a", "b").agg(count(lit(1)).as("c2"))
-    // c1 derives from c2 (c1(a) = Σ_b c2(a,b) — exact integer rollup of
-    // the same stream), so the corpus-sized stream is aggregated ONCE,
-    // not twice (guide §2.3: the old shape ran a second full-stream
-    // shuffle by `a` for a count c2 already contains)
-    val c1 = c2.groupBy("a").agg(sum(col("c2")).as("c1"))
-    val v = toked.select(explode(toks).as("tok"))
-      .agg(countDistinct(col("tok")).as("v"))
-    // the model (a, b, micro) is assembled on the MODEL side — tables of
-    // |distinct bigrams| rows — and joined to the stream once, so the ln
-    // is computed per DISTINCT bigram and the stream is never re-shuffled
-    // by `a` (the old shape joined c2 then c1 onto every OCCURRENCE)
-    val model = c2.join(c1, Seq("a"))
-      .crossJoin(broadcast(v))
-      .withColumn("micro",
-        round(log((col("c2") + 1).cast("double") /
-          (col("c1") + col("v")).cast("double")) * 1000000, 0).cast("long"))
-      .select(col("a"), col("b"), col("micro"))
-    val out = RelationalOps.materialized(
-      bi.join(model, Seq("a", "b"))
-        .groupBy(col(idCol))
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(col("micro")).as("sum_lnp_micro"))
-        .withColumn("avg_lnp",
-          round(col("sum_lnp_micro").cast("double") / 1000000 /
-            col("n_bigrams"), 4)))
-    releaseBi()
-    out
+        .select(col(idCol), col("bg.a").as("a"), col("bg.b").as("b"))) { bi =>
+      val c2 = bi.groupBy("a", "b").agg(count(lit(1)).as("c2"))
+      // c1 derives from c2 (c1(a) = Σ_b c2(a,b) — exact integer rollup of
+      // the same stream), so the corpus-sized stream is aggregated ONCE,
+      // not twice (guide §2.3: the old shape ran a second full-stream
+      // shuffle by `a` for a count c2 already contains)
+      val c1 = c2.groupBy("a").agg(sum(col("c2")).as("c1"))
+      val v = toked.select(explode(toks).as("tok"))
+        .agg(countDistinct(col("tok")).as("v"))
+      // the model (a, b, micro) is assembled on the MODEL side — tables of
+      // |distinct bigrams| rows — and joined to the stream once, so the ln
+      // is computed per DISTINCT bigram and the stream is never re-shuffled
+      // by `a` (the old shape joined c2 then c1 onto every OCCURRENCE)
+      val model = c2.join(c1, Seq("a"))
+        .crossJoin(broadcast(v))
+        .withColumn("micro",
+          round(log((col("c2") + 1).cast("double") /
+            (col("c1") + col("v")).cast("double")) * 1000000, 0).cast("long"))
+        .select(col("a"), col("b"), col("micro"))
+      RelationalOps.materialized(
+        bi.join(model, Seq("a", "b"))
+          .groupBy(col(idCol))
+          .agg(count(lit(1)).as("n_bigrams"),
+            sum(col("micro")).as("sum_lnp_micro"))
+          .withColumn("avg_lnp",
+            round(col("sum_lnp_micro").cast("double") / 1000000 /
+              col("n_bigrams"), 4)))
+    }
   }
 
   /** Deterministic epoch shuffle (VERDICT r19 #4) — the seeded,

@@ -10,7 +10,7 @@ import org.apache.spark.ml.regression.FMRegressor
 import org.apache.spark.ml.tuning.{ParamGridBuilder, TrainValidationSplit}
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import graft.ops.RelationalOps.withMaterialized
 
 /** The reference's five model pipelines behind one TrainValidationSplit
   * grid harness (SURVEY.md §2.9 M9–M18, reference
@@ -94,53 +94,47 @@ object Classifiers {
     * stepSize×factorSize). */
   def fmRegression(df: DataFrame, featuresCol: String, labelCol: String,
                    maxIter: Int = 20): EvalResult = {
-    // borrow, don't own: a caller-persisted frame must survive this
-    // harness (the borrowMaterialized contract — see Recsys.fitAls)
-    val (persisted, release) =
-      graft.ops.RelationalOps.borrowMaterialized(df)
-    val (tr, te) = split(persisted)
-    val fm = new FMRegressor().setFeaturesCol(featuresCol)
-      .setLabelCol(labelCol).setSeed(1L).setMaxIter(maxIter)
-    val grid = new ParamGridBuilder()
-      .addGrid(fm.stepSize, Array(0.1, 0.01))
-      .addGrid(fm.factorSize, Array(1, 2)).build()
-    val ev = new RegressionEvaluator().setMetricName("rmse")
-      .setLabelCol(labelCol).setPredictionCol("prediction")
-    val best = tvsGrid(fm, grid, ev, tr)
-    val pred = best.transform(te).persist(StorageLevel.MEMORY_AND_DISK)
-    val nPred = pred.count()
-    val r2 = new RegressionEvaluator().setMetricName("r2")
-      .setLabelCol(labelCol).setPredictionCol("prediction").evaluate(pred)
-    val res = EvalResult("fm_regressor", "rmse", ev.evaluate(pred), "r2", r2,
-      tr.count(), te.count(), nPred)
-    pred.unpersist()
-    release()
-    res
+    withMaterialized(df) { persisted =>
+      val (tr, te) = split(persisted)
+      val fm = new FMRegressor().setFeaturesCol(featuresCol)
+        .setLabelCol(labelCol).setSeed(1L).setMaxIter(maxIter)
+      val grid = new ParamGridBuilder()
+        .addGrid(fm.stepSize, Array(0.1, 0.01))
+        .addGrid(fm.factorSize, Array(1, 2)).build()
+      val ev = new RegressionEvaluator().setMetricName("rmse")
+        .setLabelCol(labelCol).setPredictionCol("prediction")
+      val best = tvsGrid(fm, grid, ev, tr)
+      withMaterialized(best.transform(te)) { pred =>
+        val r2 = new RegressionEvaluator().setMetricName("r2")
+          .setLabelCol(labelCol).setPredictionCol("prediction").evaluate(pred)
+        EvalResult("fm_regressor", "rmse", ev.evaluate(pred), "r2", r2,
+          tr.count(), te.count(), pred.count())
+      }
+    }
   }
 
   private def classifierMetrics(pred: DataFrame, labelCol: String,
                                 name: String, strictParity: Boolean = false,
                                 nTrain: Long = -1L, nTest: Long = -1L)
       : EvalResult = {
-    // the evaluators each pass over `pred` once more below — persist so
-    // the transform (and its upstream split lineage) runs once, and count
-    // here so the parity verdict rides the same materialization
-    val p = pred.persist(StorageLevel.MEMORY_AND_DISK)
-    val nPred = p.count()
-    val acc = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy").setLabelCol(labelCol)
-      .setPredictionCol("prediction").evaluate(p)
-    // Default: real ROC from rawPrediction. strictParity replicates the
-    // reference's rawPredictionCol="prediction" quirk verbatim
-    // (`bgrfunctions.py:250`: ROC over hard 0/1 labels — a two-point
-    // curve, ≈ 0.5 for any constant or near-constant predictor), for
-    // number-for-number replication of its published metrics (SURVEY §7.3).
-    val roc = new BinaryClassificationEvaluator()
-      .setMetricName("areaUnderROC").setLabelCol(labelCol)
-      .setRawPredictionCol(if (strictParity) "prediction" else "rawPrediction")
-      .evaluate(p)
-    p.unpersist()
-    EvalResult(name, "accuracy", acc, "roc_auc", roc, nTrain, nTest, nPred)
+    // the evaluators each pass over `pred` — persist so the transform
+    // (and its upstream split lineage) runs once
+    withMaterialized(pred) { p =>
+      val nPred = p.count()
+      val acc = new MulticlassClassificationEvaluator()
+        .setMetricName("accuracy").setLabelCol(labelCol)
+        .setPredictionCol("prediction").evaluate(p)
+      // Default: real ROC from rawPrediction. strictParity replicates the
+      // reference's rawPredictionCol="prediction" quirk verbatim
+      // (`bgrfunctions.py:250`: ROC over hard 0/1 labels — a two-point
+      // curve, ≈ 0.5 for any constant or near-constant predictor), for
+      // number-for-number replication of its published metrics (SURVEY §7.3).
+      val roc = new BinaryClassificationEvaluator()
+        .setMetricName("areaUnderROC").setLabelCol(labelCol)
+        .setRawPredictionCol(if (strictParity) "prediction" else "rawPrediction")
+        .evaluate(p)
+      EvalResult(name, "accuracy", acc, "roc_auc", roc, nTrain, nTest, nPred)
+    }
   }
 
   /** M10 — FMClassifier (reference `bgrfunctions.py:238-269`, grid over

@@ -4,7 +4,7 @@ import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.ops.RelationalOps.withMaterialized
 
 /** ALS collaborative filtering — the reference's flagship pipeline
   * (SURVEY.md §2.9 M7–M8, reference `PySpark Scripts/als.py` +
@@ -24,33 +24,27 @@ object Recsys {
   def fitAls(ratings: DataFrame, userCol: String, itemCol: String,
              ratingCol: String, rank: Int = 8, regParam: Double = 0.1,
              maxIter: Int = 5, seed: Long = 1L): FitResult = {
-    // borrow, don't own: a caller that persisted `ratings` for its own
-    // downstream consumers (qml50's known-users dim and totals agg) must
-    // not lose its cache when this fit returns — persist state lives on
-    // the shared plan, so an unconditional persist/unpersist pair here
-    // would silently drop it (the borrowMaterialized contract, q97)
-    val (persisted, release) =
-      graft.ops.RelationalOps.borrowMaterialized(ratings)
-    val Array(train, test) = persisted.randomSplit(Array(0.8, 0.2), seed = 42L)
-    val als = new ALS()
-      .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
-      .setColdStartStrategy("drop")
-      .setRank(rank).setRegParam(regParam).setMaxIter(maxIter).setSeed(seed)
-    val model = als.fit(train)
-    // persist across the two evaluators: each evaluate() is its own
-    // action, and an unpersisted pred re-runs the whole transform
-    // lineage (test-side split + two factor joins) per metric —
-    // measured 2.9s of qml50's 6.8s warm cost at sf0.1. Metrics are
-    // bit-identical: same model, same rows, same partitioning — the
-    // cache only stops the second recompute (guide §1.2 step 3).
-    val pred = model.transform(test).persist(StorageLevel.MEMORY_AND_DISK)
-    def eval(metric: String): Double = new RegressionEvaluator()
-      .setMetricName(metric).setLabelCol(ratingCol)
-      .setPredictionCol("prediction").evaluate(pred)
-    val res = FitResult(model, eval("rmse"), eval("r2"))
-    pred.unpersist()
-    release()
-    res
+    withMaterialized(ratings) { persisted =>
+      val Array(train, test) =
+        persisted.randomSplit(Array(0.8, 0.2), seed = 42L)
+      val als = new ALS()
+        .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
+        .setColdStartStrategy("drop")
+        .setRank(rank).setRegParam(regParam).setMaxIter(maxIter).setSeed(seed)
+      val model = als.fit(train)
+      // persist across the two evaluators: each evaluate() is its own
+      // action, and an uncached pred re-runs the whole transform
+      // lineage (test-side split + two factor joins) per metric —
+      // measured 2.9s of qml50's 6.8s warm cost at sf0.1. Metrics are
+      // bit-identical: same model, same rows, same partitioning — the
+      // cache only stops the second recompute (guide §1.2 step 3).
+      withMaterialized(model.transform(test)) { pred =>
+        def eval(metric: String): Double = new RegressionEvaluator()
+          .setMetricName(metric).setLabelCol(ratingCol)
+          .setPredictionCol("prediction").evaluate(pred)
+        FitResult(model, eval("rmse"), eval("r2"))
+      }
+    }
   }
 
   final case class GridResult(bestRank: Int, bestRegParam: Double,
@@ -86,11 +80,7 @@ object Recsys {
         sc.setCheckpointDir(d.toString)
         Some(d)
       } else None
-    // borrow, don't own (see fitAls): qml58 persists the bounded sample
-    // for its own count and must keep it until its release
-    val (persisted, release) =
-      graft.ops.RelationalOps.borrowMaterialized(ratings)
-    try {
+    try withMaterialized(ratings) { persisted =>
       val Array(train, test) = persisted.randomSplit(Array(0.8, 0.2), seed = 42L)
       val als = new ALS()
         .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
@@ -117,19 +107,17 @@ object Recsys {
       // persist across the two evaluators (the fitAls rationale): the
       // rmse and r2 passes would otherwise each re-run the transform
       // lineage; metrics bit-identical, only the recompute is cut
-      val pred = best.transform(test).persist(StorageLevel.MEMORY_AND_DISK)
       // both evaluate() calls are actions: by the time GridResult exists
       // the metrics are plain scalars and nothing downstream can ever
       // re-read the checkpointed factor blocks — safe to delete the dir
-      val res = GridResult(best.rank,
-        best.parent.asInstanceOf[ALS].getRegParam,
-        ev.evaluate(pred),
-        new RegressionEvaluator().setMetricName("r2").setLabelCol(ratingCol)
-          .setPredictionCol("prediction").evaluate(pred))
-      pred.unpersist()
-      res
+      withMaterialized(best.transform(test)) { pred =>
+        GridResult(best.rank,
+          best.parent.asInstanceOf[ALS].getRegParam,
+          ev.evaluate(pred),
+          new RegressionEvaluator().setMetricName("r2").setLabelCol(ratingCol)
+            .setPredictionCol("prediction").evaluate(pred))
+      }
     } finally {
-      release()
       anchoredCp.foreach { d =>
         sc.setCheckpointDir(null) // restore the no-checkpoint-dir state
         graft.Staging.deleteRecursively(d)

@@ -16,31 +16,39 @@ object RelationalOps {
 
   /** Persist `df` (MEMORY_AND_DISK — bounded memory, spills, never OOMs)
     * and materialize it with one count job, so every later consumer scans
-    * the cache instead of re-running the lineage. The tool for operators
-    * whose shared intermediate (shingle / bucket / banded frame) fans out
-    * into a sized-filter + self-join: without it the lineage above the
-    * fan-out runs once PER consumer — at 100 TB that is re-reading the
-    * corpus ~4×. Callers own the returned handle and must `unpersist()`
-    * it once their own output is materialized. */
+    * the cache instead of re-running the lineage. The way to hand an
+    * owned, persisted result to the caller (operator outputs); the caller
+    * owns the returned handle. A cache used only inside one scope goes
+    * through [[withMaterialized]] instead. */
   def materialized(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     p.count()
     p
   }
 
-  /** [[materialized]] that respects a cache the CALLER already holds on
-    * `df`: if the frame is persisted, reuse it and return a no-op
-    * release; otherwise persist it and return a release that drops
-    * ONLY the blocks this call created. For helpers that fan a
-    * caller-supplied frame into several consumers — an unconditional
-    * persist/unpersist pair would silently drop the caller's own cache
-    * on the way out (persist state lives on the shared plan, not a
-    * private copy). */
-  def borrowMaterialized(df: DataFrame): (DataFrame, () => Unit) =
-    if (df.storageLevel != StorageLevel.NONE) (df, () => ())
+  /** The one owner of a cached intermediate: for a frame that fans out
+    * into several consumers (a shingle / bucket / banded frame feeding a
+    * sized filter and a self-join) — unpersisted, the lineage above the
+    * fan-out runs once PER consumer, at 100 TB re-reading the corpus ~4×.
+    * Persists `df` (MEMORY_AND_DISK), materializes it with one count job,
+    * runs `body` over the cache and unpersists it in a `finally`, so the
+    * cache is released when `body` throws too. If `df` is already
+    * persisted — a cache the CALLER holds to reuse across several passes —
+    * `body` runs on it and nothing is released: persist state lives on the
+    * shared plan, so dropping it here would drop the caller's cache.
+    *
+    * Contract: whatever `body` returns that reads the cache must be
+    * materialized inside `body` (e.g. via [[materialized]] or a driver
+    * action); a lazy result would re-run the lineage once the cache is
+    * gone. */
+  def withMaterialized[T](df: DataFrame)(body: DataFrame => T): T =
+    if (df.storageLevel != StorageLevel.NONE) body(df)
     else {
-      val p = materialized(df)
-      (p, () => { p.unpersist(); () })
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        p.count()
+        body(p)
+      } finally p.unpersist()
     }
 
   /** J1 — "trim low-importance elements", the reference's most distinctive
@@ -452,48 +460,9 @@ object RelationalOps {
     * winner among equal-(key, time) right rows is still DETERMINISTIC
     * (the window order carries an xxhash64 of the right payload as the
     * final tie-break, so reruns and repartitionings agree), just not
-    * semantically chosen.
-    *
-    * Hot-key mitigation: a key holding a disproportionate share of rows
-    * funnels its whole stream through one window task — the generic
-    * window-skew hazard. With `hotKeyThreshold` set, keys whose row
-    * count exceeds it are pre-split into `hotKeyBuckets` contiguous
-    * TIME RANGES (per-key approx-quantile split points, so the ranges
-    * are balanced); the running window then partitions by (key, bucket)
-    * and a per-bucket carry-in — the last right row of all earlier
-    * buckets, computed on a tiny (hot-keys × buckets) frame — stitches
-    * the boundary, so results are identical to the single-window plan.
-    * Bucket assignment is monotone in time (same time ⇒ same bucket),
-    * which is what makes the stitch exact; the split points themselves
-    * may vary run-to-run (approx sketch), but the OUTPUT is invariant
-    * to where the cuts land. Costs two extra narrow passes over the
-    * union (per-key counts + hot-key quantiles), both map-side-combined
-    * — the default threshold disables the machinery entirely.
-    *
-    * Cache lifecycle on the hot-key path: the union of both inputs is
-    * persisted (it fans into five consumers) and stays persisted for the
-    * LAZY result's consumers — this method cannot release it. Harness
-    * callers are covered (Verify/Bench clear caches between queries);
-    * long-lived library callers on the hot-key path should use
-    * [[asOfJoinWithRelease]] and call the release thunk once their own
-    * output is materialized, else one cached union of both inputs leaks
-    * per call. */
+    * semantically chosen. */
   def asOfJoin(left: DataFrame, right: DataFrame, key: String,
-               time: String, out: String = "asof",
-               hotKeyThreshold: Long = Long.MaxValue,
-               hotKeyBuckets: Int = 16): DataFrame =
-    asOfJoinWithRelease(left, right, key, time, out, hotKeyThreshold,
-      hotKeyBuckets)._1
-
-  /** [[asOfJoin]] returning a release thunk alongside the result: a no-op
-    * on the default single-window path (nothing is persisted there); on
-    * the hot-key path it drops the cached union this call created. Call
-    * it only AFTER materializing the result — the result plan reads the
-    * cache. */
-  def asOfJoinWithRelease(left: DataFrame, right: DataFrame, key: String,
-               time: String, out: String = "asof",
-               hotKeyThreshold: Long = Long.MaxValue,
-               hotKeyBuckets: Int = 16): (DataFrame, () => Unit) = {
+               time: String, out: String = "asof"): DataFrame = {
     import org.apache.spark.sql.types.StructType
     val rFields = right.schema.fields.filterNot(_.name == key)
     val lType = StructType(left.schema.fields)
@@ -506,109 +475,13 @@ object RelationalOps {
       lit(0).as("__side"),
       lit(null).cast(lType).as("__l"),
       struct(rFields.map(f => col(f.name)).toIndexedSeq: _*).as("__r"))
-    val unioned = lPart.unionByName(rPart)
-    if (hotKeyThreshold == Long.MaxValue) {
-      val w = Window.partitionBy(col(key))
-        .orderBy(col("__t"), col("__side"), xxhash64(col("__r")))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      (unioned
-        .withColumn(out, last(col("__r"), ignoreNulls = true).over(w))
-        .filter(col("__side") === 1)
-        .select(col("__l.*"), col(out)), () => ())
-    } else {
-      require(hotKeyBuckets > 1,
-        "asOfJoin: hotKeyBuckets must be > 1 when hot-key splitting is on")
-      // The union of both inputs fans into FIVE consumers on this path
-      // (hot-key count, split-point collect, and — through withB — the
-      // window, per-bucket-last, and spine subtrees). Unpersisted, the
-      // full left+right lineage re-runs per consumer (~5 corpus scans
-      // at scale); persisted, it runs once and the consumers scan the
-      // cache. Left persisted for the result's consumers — the result
-      // is lazy, so the blocks cannot be released inside this function;
-      // ownership goes to the returned release thunk (see scaladoc).
-      val unionedM = materialized(unioned)
-      // hot keys are few by definition (each holds > threshold rows), so
-      // both the hot-key list and the per-key split points broadcast
-      val hot = unionedM.groupBy(col(key)).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > hotKeyThreshold).select(col(key))
-      // ADAPTIVE FAST PATH (r21): when NO key exceeds the threshold the
-      // bucket machinery is an exact no-op — every row gets __splits =
-      // null → bucket 0, the (key, 0) window IS the (key) window, and
-      // the carry join coalesces against null — so probe the hot list
-      // first (one map-side-combined count over the cache, the same
-      // aggregation the slow path needs anyway) and run the plain
-      // single-window plan over the cached union instead, skipping the
-      // split-point collect, broadcast join, per-bucket-last, spine and
-      // carry stages entirely. The armed-threshold-but-no-hot-keys case
-      // is the COMMON one (the guard exists for the tail risk); with
-      // hot keys present the machinery below is unchanged.
-      if (hot.isEmpty) {
-        val w = Window.partitionBy(col(key))
-          .orderBy(col("__t"), col("__side"), xxhash64(col("__r")))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return (unionedM
-          .withColumn(out, last(col("__r"), ignoreNulls = true).over(w))
-          .filter(col("__side") === 1)
-          .select(col("__l.*"), col(out)),
-          () => { unionedM.unpersist(); () })
-      }
-      val probs = array((1 until hotKeyBuckets)
-        .map(i => lit(i.toDouble / hotKeyBuckets)): _*)
-      // The split points are COLLECTED once and re-broadcast as a literal
-      // local relation, for correctness, not convenience: the bucketed
-      // frame feeds three subtrees (window, per-bucket-last, spine), and
-      // approx-quantile results can vary with partial-merge order across
-      // re-executions — branches disagreeing on a boundary would mis-
-      // stitch a carry row. The collect is self-bounding: every hot key
-      // holds > hotKeyThreshold rows, so there are at most
-      // total/hotKeyThreshold rows here, independent of data scale.
-      val splitRows = unionedM.join(broadcast(hot), Seq(key), "left_semi")
-        .groupBy(col(key))
-        .agg(percentile_approx(col("__t").cast("double"), probs,
-          lit(10000)).as("__splits"))
-        .collect()
-      val splitSchema = org.apache.spark.sql.types.StructType(Seq(
-        unionedM.schema(key),
-        org.apache.spark.sql.types.StructField("__splits",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-      val splits = unionedM.sparkSession.createDataFrame(
-        java.util.Arrays.asList(splitRows: _*), splitSchema)
-      // bucket = number of split points <= t: monotone in t, so every
-      // bucket is a contiguous time range and equal times share a bucket
-      val withB = unionedM.join(broadcast(splits), Seq(key), "left")
-        .withColumn("__bucket",
-          when(col("__splits").isNull, lit(0)).otherwise(
-            size(filter(col("__splits"),
-              s => s <= col("__t").cast("double")))))
-        .drop("__splits")
-      val wB = Window.partitionBy(col(key), col("__bucket"))
-        .orderBy(col("__t"), col("__side"), xxhash64(col("__r")))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val windowed = withB.withColumn("__run",
-        last(col("__r"), ignoreNulls = true).over(wB))
-      // carry-in per (key, bucket): the winning right row of each bucket
-      // (same (t, hash) order as the window), prefix-propagated across
-      // buckets on a frame of at most (#keys × buckets) rows — the
-      // window below is over ≤ hotKeyBuckets rows per key, never data
-      val lastPerBucket = withB.filter(col("__side") === 0)
-        .groupBy(col(key), col("__bucket"))
-        .agg(max_by(col("__r"),
-          struct(col("__t"), xxhash64(col("__r")))).as("__last_r"))
-      val spine = withB.select(col(key), col("__bucket")).distinct()
-      val wCarry = Window.partitionBy(col(key)).orderBy(col("__bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val carry = spine
-        .join(lastPerBucket, Seq(key, "__bucket"), "left")
-        .withColumn("__carry",
-          last(col("__last_r"), ignoreNulls = true).over(wCarry))
-        .select(col(key), col("__bucket"), col("__carry"))
-      (windowed.join(carry, Seq(key, "__bucket"), "left")
-        .withColumn(out, coalesce(col("__run"), col("__carry")))
-        .filter(col("__side") === 1)
-        .select(col("__l.*"), col(out)),
-        () => { unionedM.unpersist(); () })
-    }
+    val w = Window.partitionBy(col(key))
+      .orderBy(col("__t"), col("__side"), xxhash64(col("__r")))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    lPart.unionByName(rPart)
+      .withColumn(out, last(col("__r"), ignoreNulls = true).over(w))
+      .filter(col("__side") === 1)
+      .select(col("__l.*"), col(out))
   }
 
   /** W4 — grouped top-k via ranked window; Spark 4's WindowGroupLimit rule

@@ -187,14 +187,15 @@ object GraftProps extends Properties("graft") {
           .map { case (ws, i) => ((i + 1).toLong, ws.mkString(" ")) }
           .toDF("doc_id", "text")
         val sh = graft.ext.Dedup.shingles(docs, "doc_id", "text", 3)
-        val truth = graft.ext.Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000000L)
-          .select("id_a", "id_b", "jaccard")
-          .as[(Long, Long, Double)].collect()
-          .map { case (a, b, j) => (a, b) -> j }.toMap
-        val capped = graft.ext.Dedup.jaccardPairs(sh, "doc_id", maxDf = maxDf)
-          .select("id_a", "id_b", "jaccard")
-          .as[(Long, Long, Double)].collect()
-        capped.forall { case (a, b, j) =>
+        // jaccardPairs hands back a persisted result the caller owns
+        def pairs(cap: Long) = {
+          val out = graft.ext.Dedup.jaccardPairs(sh, "doc_id", maxDf = cap)
+          try out.select("id_a", "id_b", "jaccard")
+            .as[(Long, Long, Double)].collect()
+          finally out.unpersist()
+        }
+        val truth = pairs(1000000L).map { case (a, b, j) => (a, b) -> j }.toMap
+        pairs(maxDf).forall { case (a, b, j) =>
           truth.get((a, b)).exists(t => j <= t + 1e-12)
         }
       }

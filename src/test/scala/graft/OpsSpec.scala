@@ -600,89 +600,33 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("asOfJoin hot-key split equals the single-window plan and buckets the window") {
-    // key 1 holds 90% of rows — the scenario where the plain as-of join
-    // funnels everything through one window task
-    val left = spark.range(20000).select(
-      when(col("id") % 10 < 9, 1L).otherwise(2L).as("k"),
-      pmod(col("id") * 7, lit(100000)).as("t"),
-      col("id").as("lv"))
-    val right = spark.range(2000).select(
-        when(col("id") % 10 < 9, 1L).otherwise(2L).as("k"),
-        pmod(col("id") * 31, lit(100000)).as("t"),
-        col("id").as("rv"))
-      .groupBy("k", "t").agg(max("rv").as("rv")) // unique per (key, time)
-    val plain = RelationalOps.asOfJoin(left, right, "k", "t")
-      .select(col("lv"), col("asof.rv").as("rv"))
-    val split = RelationalOps.asOfJoin(left, right, "k", "t", "asof",
-      hotKeyThreshold = 1000L, hotKeyBuckets = 16)
-      .select(col("lv"), col("asof.rv").as("rv"))
-    // boundary stitch must be EXACT: identical matches row for row
-    val p = plain.as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
-    val s = split.as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
-    assert(p == s && p.nonEmpty)
-    // and the running window actually partitions by (key, bucket)
-    val planStr = split.queryExecution.executedPlan.toString
-    assert(planStr.contains("__bucket"),
-      s"window not bucket-partitioned:\n${planStr.take(2000)}")
-  }
-
-  test("asOfJoin armed-threshold fast path (no hot keys) equals the plain " +
-    "plan and skips the bucket machinery") {
-    // r21: when the threshold is armed but NO key exceeds it (the common
-    // production case), the probe must fall back to the plain
-    // single-window plan — identical rows, no __bucket column in the
-    // executed plan, and the release thunk still owns the cached union
-    val left = spark.range(5000).select(pmod(col("id"), lit(50)).as("k"),
-      pmod(col("id") * 7, lit(100000)).as("t"), col("id").as("lv"))
-    val right = spark.range(500).select(pmod(col("id"), lit(50)).as("k"),
-        pmod(col("id") * 31, lit(100000)).as("t"), col("id").as("rv"))
-      .groupBy("k", "t").agg(max("rv").as("rv"))
-    val plain = RelationalOps.asOfJoin(left, right, "k", "t")
-      .select(col("lv"), col("asof.rv").as("rv"))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    // every key holds ~110 rows, far below the 100k threshold
-    val (fast, release) = RelationalOps.asOfJoinWithRelease(left, right,
-      "k", "t", "asof", hotKeyThreshold = 100000L, hotKeyBuckets = 16)
-    val f = fast.select(col("lv"), col("asof.rv").as("rv"))
-    val p = plain.as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
-    val s = f.as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
-    assert(p == s && p.nonEmpty)
-    val planStr = f.queryExecution.executedPlan.toString
-    assert(!planStr.contains("__bucket"),
-      s"fast path did not skip the bucket machinery:\n${planStr.take(2000)}")
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
-      "fast path did not persist the union — the release test is vacuous")
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "fast path's release() left cached blocks behind")
-  }
-
-  test("asOfJoinWithRelease: hot-key path's release drops its cached union") {
-    // ADVICE r17: the hot path persists the tagged union for its five
-    // consumers and the lazy result cannot release it in-method — library
-    // callers get a release thunk (the connectedComponents convention)
-    val left = spark.range(2000).select(lit(1L).as("k"),
-      pmod(col("id") * 7, lit(9999)).as("t"), col("id").as("lv"))
-    val right = spark.range(200).select(lit(1L).as("k"),
-        pmod(col("id") * 31, lit(9999)).as("t"), col("id").as("rv"))
-      .groupBy("k", "t").agg(max("rv").as("rv"))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val (out, release) = RelationalOps.asOfJoinWithRelease(left, right,
-      "k", "t", "asof", hotKeyThreshold = 100L, hotKeyBuckets = 4)
-    val n = out.count() // materialize BEFORE releasing (the contract)
-    assert(n == 2000)
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
-      "hot path did not persist its union — the release test is vacuous")
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "release() left cached blocks behind")
-    // default path: nothing persisted, release is a no-op
-    val (out2, release2) = RelationalOps.asOfJoinWithRelease(left, right,
-      "k", "t")
-    assert(out2.count() == 2000)
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
-    release2()
+  test("withMaterialized caches for the body only, also when it throws, " +
+      "and reuses a cache the caller holds") {
+    import org.apache.spark.storage.StorageLevel
+    val cm = spark.sharedState.cacheManager
+    BenchSession.releaseCaches(spark)
+    val df = spark.range(100).select((col("id") % 7).as("k"))
+    val n = RelationalOps.withMaterialized(df) { p =>
+      assert(p.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        "body does not run on a cached frame")
+      assert(spark.sparkContext.getPersistentRDDs.size == 1,
+        "expected exactly one cached relation during the body")
+      p.count()
+    }
+    assert(n == 100 && cm.isEmpty, "cache not released after the body")
+    intercept[IllegalStateException] {
+      RelationalOps.withMaterialized(df) { _ =>
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(cm.isEmpty, "cache not released when the body throws")
+    val held = df.persist()
+    try {
+      held.count()
+      RelationalOps.withMaterialized(df) { p => p.count() }
+      assert(df.storageLevel != StorageLevel.NONE,
+        "the caller's cache was dropped")
+    } finally held.unpersist()
   }
 
   test("dictionary queries leave no persisted RDDs behind (zipWithRank lifecycle)") {

@@ -13,6 +13,14 @@ class RegistrySpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** Names of the Scala files under `roots` whose text matches `pattern`. */
+  private def filesWith(roots: Seq[String], pattern: String): Seq[String] = {
+    val re = pattern.r
+    roots.flatMap(scalaFiles)
+      .filter(f => re.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.getFileName.toString).sorted
+  }
+
   test("query names are unique and well-formed") {
     val names = QueryRegistry.all.map(_.name)
     assert(names.distinct.size == names.size)
@@ -39,12 +47,6 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("JSON artifacts have one writer") {
-    def filesWith(roots: Seq[String], pattern: String) = {
-      val re = pattern.r
-      roots.flatMap(scalaFiles)
-        .filter(f => re.findFirstIn(Files.readString(f)).isDefined)
-        .map(_.getFileName.toString)
-    }
     // split literal, so this file does not match its own scan
     val escaper = filesWith(Seq("src/main/scala", "src/test/scala"),
       "Json" + "Escape")
@@ -63,6 +65,24 @@ class RegistrySpec extends AnyFunSuite {
       .map(_.toString)
     assert(hits == Seq("src/main/scala/graft/ml/Recsys.scala"),
       s"setCheckpointDir in $hits")
+  }
+
+  test("cached intermediates have one owner") {
+    // RelationalOps.withMaterialized owns every cache an operator or query
+    // takes for its own consumers; the CC loop's per-round label RDD is
+    // the one hand-managed persist, BenchSession.releaseCaches the one
+    // global release. Split literals, so this file does not match itself.
+    val main = Seq("src/main/scala")
+    val persists = filesWith(main, """\.persist\(|\.cache""" + """\(\)""")
+    assert(persists.toSet.subsetOf(Set("RelationalOps.scala", "Dedup.scala")),
+      s"persist/cache in $persists")
+    val releases = filesWith(main, "un" + "persist")
+    assert(releases.toSet.subsetOf(
+        Set("RelationalOps.scala", "Dedup.scala", "BenchSession.scala")),
+      s"unpersist in $releases")
+    val gone = filesWith(Seq("src/main/scala", "src/test/scala"),
+      "borrow" + "Materialized|asOfJoin" + "WithRelease|hotKey" + "Threshold")
+    assert(gone.isEmpty, s"removed cache/hot-key API named in $gone")
   }
 
   test("oracle SQL never references fixture paths or engine internals") {
