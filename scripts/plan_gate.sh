@@ -10,7 +10,8 @@
 #   baseline: default = newest committed plan_shape_r*.json
 #   new:      when omitted, the current binary is ALWAYS re-stamped to
 #             target/plan_shape_stamp.json via graft.PlanStamp
-#             (planning-only; ~1 min with the ML fits) — a leftover
+#             (no timed runs, but 50 queries run jobs while they are
+#             built — see PlanStamp; ~3 min at sf0.1) — a leftover
 #             stamp is never reused. Pass an existing stamp path (e.g.
 #             a PlanStamp output written earlier) to gate on it as-is;
 #             a nonexistent explicit path exits 2.

@@ -4,14 +4,19 @@ package graft
 /** The plan-shape stamp writer: the per-query
   * `{n_exchanges, has_broadcast, wholestage}` JSON ([[PlanShape]]) that
   * the plan-regression gate (`scripts/plan_gate.sh`) diffs, produced
-  * without any timed run. Building a query's DataFrame is planning-only
-  * for the relational registry; the eager queries execute while
-  * constructing their result relations — the ML-harness fits and
-  * q106's bounded streaming run — so a full stamp costs roughly the
-  * ML subtotal plus ~2 s (sf0.1), still far below a full bench. Their
-  * stamped shape is the local result relation, not the inner
-  * fit/streaming topology (the streaming topology is pinned by
-  * StreamParitySpec + the env-gated suites, not the plan gate).
+  * without any timed run. Building a query is not planning-only:
+  * counted with a job listener around each `fn` at sf0.01, 50 of the
+  * 117 registered queries run Spark jobs while they are built, besides
+  * the one parquet schema read per table load — the ML fits, operators
+  * that materialize cached intermediates, staging that writes or
+  * collects scratch inputs, zipWithRank dictionary ids, driver-side
+  * scalars (q44, q66, q85, q93) and q106's bounded streaming run
+  * (per-query counts: ROADMAP direction 4). A full stamp therefore costs
+  * roughly the ML subtotal plus those jobs, still far below a full
+  * bench, and what it stamps is the plan left after them — for q52 and
+  * the ML harnesses a local result relation, not the topology the jobs
+  * ran (the streaming topology is pinned by StreamParitySpec + the
+  * env-gated suites, not the plan gate).
   *
   * A query whose construction or capture throws is OMITTED from the
   * stamp — the diff then reports it as REMOVED and exits 1, so a

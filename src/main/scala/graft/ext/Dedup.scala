@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.MinhashParams
 import graft.ops.RelationalOps
 
 /** Deduplication operators for large-scale training-data pipelines:
@@ -22,7 +23,7 @@ import graft.ops.RelationalOps
   */
 object Dedup {
 
-  val MinhashPrime = 2147483647L // 2^31 - 1
+  val MinhashPrime: Long = MinhashParams.Prime
 
   /** Exact dedup: survivor = min(id) per content digest. One shuffle on a
     * 128-bit md5 (raw text stays at the mappers). */
@@ -139,35 +140,12 @@ object Dedup {
       sh.join(dict, Seq("shingle"))
     } else sh.withColumn("sid", xxhash64(col("shingle")))
 
-  /** splitmix64 finalizer — the standard 64-bit avalanche mixer. Used to
-    * derive minhash parameters that are actually independent across i. */
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  /** Parameters of the i-th minhash h_i(x) = (a_i·x + b_i) mod p:
-    * a_i ∈ [1, p−1], b_i ∈ [0, p−1], both splitmix64-mixed from i — a
-    * fixed pure function of i (no RNG state → reproducible everywhere,
-    * and the DuckDB oracles embed the same values as literals).
-    *
-    * Why mixed and not a linear ramp: the original family used
-    * a_i = (i+1)·c, b_i = (i+1)·d + e, which factors as
-    * h_i(x) = (i+1)·g(x) + e mod p with g(x) = c·x + d. Any shingle
-    * whose g(x) lands below p/numHashes then minimizes EVERY h_i
-    * simultaneously (no mod wraparound to break the order), and a doc
-    * with ≥ numHashes shingles almost surely has one — so the whole
-    * signature collapsed to effectively ONE independent hash. Recall
-    * then depended on whether the few differing shingles of a near-dup
-    * pair contained the g-minimizer: sf0.1 surfaced Jaccard-0.98 pairs
-    * missed across ALL bands (theoretical miss odds ~1e-5 per pair).
-    * Mixed parameters restore pairwise-independence and the banding
-    * math the candidate-recall claims are computed from. */
-  def hashParams(i: Int): (Long, Long) = (
-    Math.floorMod(mix64(2L * i), MinhashPrime - 1) + 1L,
-    Math.floorMod(mix64(2L * i + 1), MinhashPrime))
+  /** Parameters (a_i, b_i) of the i-th minhash h_i(x) = (a_i·x + b_i) mod p,
+    * read from the one hash family [[graft.functions.MinhashParams]] that
+    * the fused `MinhashMins` expression binds too (the DuckDB oracles
+    * embed the same values as literals). */
+  def hashParams(i: Int): (Long, Long) =
+    (MinhashParams.A(i), MinhashParams.B(i))
 
   /** MinHash signatures with `numHashes` affine hashes
     * h_i(x) = (a_i·x + b_i) mod p, banded `numHashes/rowsPerBand` ways.
@@ -187,6 +165,9 @@ object Dedup {
     require(numHashes % rowsPerBand == 0,
       s"numHashes ($numHashes) must be a multiple of rowsPerBand " +
         s"($rowsPerBand) — a partial band would silently drop hashes")
+    require(numHashes <= MinhashParams.MaxHashes,
+      s"numHashes ($numHashes) exceeds the hash family's " +
+        s"${MinhashParams.MaxHashes} precomputed functions")
     val mins = (0 until numHashes).map { i =>
       val (a, b) = hashParams(i)
       // reduce sid into [0, p) FIRST: xxhash64 ids (production path) span
@@ -270,8 +251,8 @@ object Dedup {
     // all numHashes minima in ONE fused codegen pass over the sid array
     // (functions.MinhashMins) instead of numHashes separate interpreted
     // array_min(transform(...)) evaluations — the signature arithmetic,
-    // parameters and min semantics are identical (hash-family equality
-    // pinned by test; composition equality vs the exploded aggregation
+    // parameters and min semantics are identical (one hash family,
+    // MinhashParams; composition equality vs the exploded aggregation
     // path pinned in OpsSpec), only the evaluation fuses (guide §4)
     graft.functions.VectorFunctions.register(docs.sparkSession)
     val mins = (0 until numHashes).map { i =>

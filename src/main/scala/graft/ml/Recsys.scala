@@ -1,10 +1,9 @@
 package graft.ml
 
-import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
+import org.apache.spark.ml.tuning.ParamGridBuilder
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.RelationalOps.withMaterialized
 
 /** ALS collaborative filtering — the reference's flagship pipeline
   * (SURVEY.md §2.9 M7–M8, reference `PySpark Scripts/als.py` +
@@ -12,7 +11,8 @@ import graft.ops.RelationalOps.withMaterialized
   * (`coldStartStrategy='drop', maxIter, seed=1`); unlike the reference,
   * every random split is seeded (its `randomSplit` was unseeded — SURVEY
   * §2.9 M19) and the training input is persisted before the iterative fit
-  * so the lineage is not recomputed per iteration sweep.
+  * so the lineage is not recomputed per iteration sweep — both through
+  * [[Classifiers.heldOut]], the harness every model shares.
   */
 object Recsys {
 
@@ -20,30 +20,17 @@ object Recsys {
 
   /** Train ALS with held-out metrics (reference `als_prediction`,
     * `bgrfunctions.py:179-201`, grid collapsed to one point for bench
-    * sanity — the TVS grid harness lives in [[Classifiers.tvsGrid]]). */
+    * sanity — the grid is [[fitAlsGrid]]). */
   def fitAls(ratings: DataFrame, userCol: String, itemCol: String,
              ratingCol: String, rank: Int = 8, regParam: Double = 0.1,
              maxIter: Int = 5, seed: Long = 1L): FitResult = {
-    withMaterialized(ratings) { persisted =>
-      val Array(train, test) =
-        persisted.randomSplit(Array(0.8, 0.2), seed = 42L)
-      val als = new ALS()
-        .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
-        .setColdStartStrategy("drop")
-        .setRank(rank).setRegParam(regParam).setMaxIter(maxIter).setSeed(seed)
-      val model = als.fit(train)
-      // persist across the two evaluators: each evaluate() is its own
-      // action, and an uncached pred re-runs the whole transform
-      // lineage (test-side split + two factor joins) per metric —
-      // measured 2.9s of qml50's 6.8s warm cost at sf0.1. Metrics are
-      // bit-identical: same model, same rows, same partitioning — the
-      // cache only stops the second recompute (guide §1.2 step 3).
-      withMaterialized(model.transform(test)) { pred =>
-        def eval(metric: String): Double = new RegressionEvaluator()
-          .setMetricName(metric).setLabelCol(ratingCol)
-          .setPredictionCol("prediction").evaluate(pred)
-        FitResult(model, eval("rmse"), eval("r2"))
-      }
+    val als = new ALS()
+      .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
+      .setColdStartStrategy("drop")
+      .setRank(rank).setRegParam(regParam).setMaxIter(maxIter).setSeed(seed)
+    Classifiers.heldOut(ratings)(als.fit(_)) { (model, _, _, pred) =>
+      val (rmse, r2) = Classifiers.rmseR2(pred, ratingCol)
+      FitResult(model, rmse, r2)
     }
   }
 
@@ -52,23 +39,29 @@ object Recsys {
 
   /** The reference's actual ALS tuning loop (`bgrfunctions.py:179-201`):
     * TrainValidationSplit over rank × regParam with trainRatio 0.8,
-    * RMSE-selected. Input persisted once — the TVS harness fits
-    * |ranks|·|regParams| + 1 models over the same frame. The flagship
-    * qml50 stays a single point (bench sanity); this is the grid. */
+    * RMSE-selected, through the same held-out harness as [[fitAls]]. The
+    * flagship qml50 stays a single point (bench sanity); this is the
+    * grid. */
   def fitAlsGrid(ratings: DataFrame, userCol: String, itemCol: String,
                  ratingCol: String, ranks: Seq[Int], regParams: Seq[Double],
                  maxIter: Int = 5, seed: Long = 1L): GridResult = {
-    import org.apache.spark.ml.tuning.ParamGridBuilder
+    val als = new ALS()
+      .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
+      .setColdStartStrategy("drop") // unseen users/items must not NaN the metric
+      .setMaxIter(maxIter).setSeed(seed)
+    val grid = new ParamGridBuilder()
+      .addGrid(als.rank, ranks.toArray)
+      .addGrid(als.regParam, regParams.toArray).build()
     // ALS truncates its factor lineage every checkpointInterval (10)
     // iterations ONLY when the context has a checkpoint dir; without one
     // a deep fit (maxIter > ~10) at scale builds an object graph whose
-    // task deserialization overflows the executor thread stack
-    // (surfaced by the sf0.1 verbatim-grid run). Respect a caller-set
-    // dir; otherwise anchor a temp one for the fit's duration — and undo
-    // the mutation afterwards: the checkpoint dir is session-global
-    // state, so a leftover setting would silently redirect every later
-    // checkpoint user, and the temp dir itself (holding checkpointed
-    // factor RDD blocks) would accumulate on a real cluster's DFS.
+    // task deserialization overflows the executor thread stack. Respect a
+    // caller-set dir; otherwise anchor a temp one for the fit's duration —
+    // and undo the mutation afterwards: the checkpoint dir is
+    // session-global state, so a leftover setting would silently redirect
+    // every later checkpoint user, and the temp dir itself (holding
+    // checkpointed factor RDD blocks) would accumulate on a real
+    // cluster's DFS.
     val sc = ratings.sparkSession.sparkContext
     val anchoredCp: Option[java.nio.file.Path] =
       if (sc.getCheckpointDir.isEmpty && maxIter > 10) {
@@ -80,44 +73,15 @@ object Recsys {
         sc.setCheckpointDir(d.toString)
         Some(d)
       } else None
-    try withMaterialized(ratings) { persisted =>
-      val Array(train, test) = persisted.randomSplit(Array(0.8, 0.2), seed = 42L)
-      val als = new ALS()
-        .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
-        .setColdStartStrategy("drop") // unseen users/items must not NaN the metric
-        .setMaxIter(maxIter).setSeed(seed)
-      val grid = new ParamGridBuilder()
-        .addGrid(als.rank, ranks.toArray)
-        .addGrid(als.regParam, regParams.toArray).build()
-      val ev = new RegressionEvaluator().setMetricName("rmse")
-        .setLabelCol(ratingCol).setPredictionCol("prediction")
-      // parallelism 4 (r22): r21 measured concurrent ALS fits SLOWER
-      // (18.1s at parallelism 4 vs 10.4s sequential) and pinned this to
-      // 1 — but that contention was the bypass-merge shuffle writer's
-      // M·R tiny-file churn (each ALS iteration shuffles factor blocks;
-      // concurrent fits multiplied the mmap/unmap storm). With the
-      // sort-based writer (BenchSession r22) the fits back-fill instead:
-      // re-measured qml58 6.5/7.3s sequential vs 5.3/5.4s at 2 vs 4.3s
-      // at 4, two windows. Results unchanged by construction (each grid
-      // point's fit is independently seeded; the metric array is indexed
-      // by grid position, so completion order never enters — the r21
-      // qml53 argument), re-pinned by ReferenceAlsSpec/scale_suite.
-      val best = Classifiers.tvsGrid(als, grid, ev, train,
-        parallelism = 4)
-      // persist across the two evaluators (the fitAls rationale): the
-      // rmse and r2 passes would otherwise each re-run the transform
-      // lineage; metrics bit-identical, only the recompute is cut
-      // both evaluate() calls are actions: by the time GridResult exists
-      // the metrics are plain scalars and nothing downstream can ever
-      // re-read the checkpointed factor blocks — safe to delete the dir
-      withMaterialized(best.transform(test)) { pred =>
-        GridResult(best.rank,
-          best.parent.asInstanceOf[ALS].getRegParam,
-          ev.evaluate(pred),
-          new RegressionEvaluator().setMetricName("r2").setLabelCol(ratingCol)
-            .setPredictionCol("prediction").evaluate(pred))
-      }
+    try Classifiers.heldOut(ratings)(Classifiers.tvsGrid(als, grid,
+        Classifiers.regression("rmse", ratingCol), _)) {
+      (best, _, _, pred) =>
+        val (rmse, r2) = Classifiers.rmseR2(pred, ratingCol)
+        GridResult(best.rank, best.parent.asInstanceOf[ALS].getRegParam,
+          rmse, r2)
     } finally {
+      // the metrics are plain scalars by now, so nothing can re-read the
+      // checkpointed factor blocks: the dir is safe to delete
       anchoredCp.foreach { d =>
         sc.setCheckpointDir(null) // restore the no-checkpoint-dir state
         graft.Staging.deleteRecursively(d)

@@ -88,6 +88,29 @@ class MlStreamSpec extends AnyFunSuite {
       s"sane mode should separate this data: $sane")
   }
 
+  test("the held-out harness releases every cache it takes, also when the fit throws") {
+    // the harness persists an unpersisted input and the held-out
+    // predictions; both must be gone afterwards. ALS's factor RDDs are
+    // Spark's own (never in the cache manager) and not checked here.
+    val cm = spark.sharedState.cacheManager
+    BenchSession.releaseCaches(spark)
+    Recsys.fitAls(Tables.ratings(spark, Sf), "user_id", "item_id", "rating",
+      rank = 4, regParam = 0.1, maxIter = 2)
+    assert(cm.isEmpty, "fitAls left a cached relation")
+    val raw = (0 until 200).map { i =>
+      (i.toDouble % 7, 10.0 + i % 11, if (i % 5 < 3) 0.0 else 1.0)
+    }.toDF("x1", "x2", "y")
+    val df = FeaturePipeline.assembleAndScale(raw, Seq("x1", "x2"))
+    Classifiers.fmRegression(df, "scaled_features", "x2", maxIter = 2)
+    assert(cm.isEmpty, "fmRegression left a cached relation")
+    Classifiers.logistic(df, "scaled_features", "y", maxIters = Seq(5))
+    assert(cm.isEmpty, "logistic left a cached relation")
+    intercept[IllegalArgumentException] {
+      Classifiers.logistic(df, "scaled_features", "no_such_label")
+    }
+    assert(cm.isEmpty, "a throwing fit left a cached relation")
+  }
+
   test("tumbling stream (Append + watermark) agrees with batch on closed windows") {
     // nanosAsLong is set by Tables' footer probe iff the fixture needs it
     val q = StreamingWindows.runTumblingStream(spark, Sf,

@@ -521,14 +521,10 @@ class OpsSpec extends AnyFunSuite {
       a >= 1 && a < p && b >= 0 && b < p })
     assert(params.map(_._1).distinct.size == 64 &&
       params.map(_._2).distinct.size == 64)
-    // the codegen expression layer (MinhashMins) carries its own copy of
-    // the derivation (it must not depend on the operator layer): pin the
-    // two families identical over the whole precomputed table
-    assert((0 until graft.functions.MinhashParams.MaxHashes).forall { i =>
-      val (a, b) = graft.ext.Dedup.hashParams(i)
-      graft.functions.MinhashParams.A(i) == a &&
-        graft.functions.MinhashParams.B(i) == b
-    }, "MinhashParams (expression layer) diverged from Dedup.hashParams")
+    // a signature wider than the precomputed family fails loudly
+    val tooMany = graft.functions.MinhashParams.MaxHashes + 4
+    intercept[IllegalArgumentException](graft.ext.Dedup.minhashBuckets(
+      spark.emptyDataFrame, "doc_id", numHashes = tooMany, rowsPerBand = 4))
   }
 
   test("row-local minhash banding == exploded production path") {

@@ -85,6 +85,31 @@ class RegistrySpec extends AnyFunSuite {
     assert(gone.isEmpty, s"removed cache/hot-key API named in $gone")
   }
 
+  test("models share one held-out harness") {
+    // every model function splits, fits and scores through
+    // Classifiers.heldOut and tunes through Classifiers.tvsGrid; each
+    // site is named by its file and the last `def` above it. Split
+    // literals, so this file does not match its own scan.
+    def sites(pattern: String): Seq[String] = {
+      val re = pattern.r
+      val enclosingDef = """def\s+(\w+)""".r
+      scalaFiles("src/main/scala").flatMap { f =>
+        val text = Files.readString(f)
+        re.findAllMatchIn(text).map { m =>
+          val owner = enclosingDef.findAllMatchIn(text.take(m.start))
+            .map(_.group(1)).toSeq.lastOption.getOrElse("")
+          s"${Paths.get("src/main/scala").relativize(f)}:$owner"
+        }
+      }.sorted
+    }
+    val splits = sites("random" + """Split\(""")
+    assert(splits == Seq("graft/ml/Classifiers.scala:heldOut"),
+      s"randomSplit at $splits")
+    val tuners = sites("""new\s+""" + "TrainValidationSplit")
+    assert(tuners == Seq("graft/ml/Classifiers.scala:tvsGrid"),
+      s"TrainValidationSplit built at $tuners")
+  }
+
   test("oracle SQL never references fixture paths or engine internals") {
     QueryRegistry.all.flatMap(_.oracle).foreach { sql =>
       assert(!sql.contains("/root/"), "oracle must address tables by name")
