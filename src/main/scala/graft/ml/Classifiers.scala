@@ -79,10 +79,12 @@ object Classifiers {
     new RegressionEvaluator().setMetricName(metric).setLabelCol(labelCol)
       .setPredictionCol("prediction")
 
-  /** Held-out (RMSE, R²) of a prediction frame. */
-  private[ml] def rmseR2(pred: DataFrame, labelCol: String): (Double, Double) =
-    (regression("rmse", labelCol).evaluate(pred),
-      regression("r2", labelCol).evaluate(pred))
+  /** Held-out (RMSE, R²) of a prediction frame, both from one metrics
+    * pass (each `evaluate` would run its own). */
+  private[ml] def rmseR2(pred: DataFrame, labelCol: String): (Double, Double) = {
+    val m = regression("rmse", labelCol).getMetrics(pred)
+    (m.rootMeanSquaredError, m.r2)
+  }
 
   private def accuracy(labelCol: String): MulticlassClassificationEvaluator =
     new MulticlassClassificationEvaluator().setMetricName("accuracy")

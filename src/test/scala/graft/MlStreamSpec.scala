@@ -27,6 +27,19 @@ class MlStreamSpec extends AnyFunSuite {
       (1 to byUser.values.head.length).take(5)))
   }
 
+  test("ALS blocks follow the session's parallelism") {
+    val cores = spark.sparkContext.defaultParallelism
+    val model = Recsys.fitAls(Tables.ratings(spark, Sf), "user_id", "item_id",
+      "rating").model
+    assert(model.userFactors.rdd.getNumPartitions == cores)
+    assert(model.itemFactors.rdd.getNumPartitions == cores)
+    val ranks = Recsys.recommendTopK(model, k = 3)
+      .select("user_id", "rank").as[(Int, Int)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
+    val bad = ranks.filter(_._2 != Seq(1, 2, 3))
+    assert(ranks.nonEmpty && bad.isEmpty, s"ranks not 1..3: ${bad.take(5)}")
+  }
+
   test("ALS TVS grid on sf0.001: winner comes from the grid, RMSE under ceiling") {
     val r = Recsys.fitAlsGrid(Tables.ratings(spark, Sf), "user_id",
       "item_id", "rating", ranks = Seq(4, 8), regParams = Seq(0.1, 0.01),

@@ -85,29 +85,41 @@ class RegistrySpec extends AnyFunSuite {
     assert(gone.isEmpty, s"removed cache/hot-key API named in $gone")
   }
 
+  /** Every match of `pattern` under src/main, named by its file and the
+    * last `def` above it. */
+  private def sites(pattern: String): Seq[String] = {
+    val re = pattern.r
+    val enclosingDef = """def\s+(\w+)""".r
+    scalaFiles("src/main/scala").flatMap { f =>
+      val text = Files.readString(f)
+      re.findAllMatchIn(text).map { m =>
+        val owner = enclosingDef.findAllMatchIn(text.take(m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("")
+        s"${Paths.get("src/main/scala").relativize(f)}:$owner"
+      }
+    }.sorted
+  }
+
   test("models share one held-out harness") {
     // every model function splits, fits and scores through
-    // Classifiers.heldOut and tunes through Classifiers.tvsGrid; each
-    // site is named by its file and the last `def` above it. Split
+    // Classifiers.heldOut and tunes through Classifiers.tvsGrid. Split
     // literals, so this file does not match its own scan.
-    def sites(pattern: String): Seq[String] = {
-      val re = pattern.r
-      val enclosingDef = """def\s+(\w+)""".r
-      scalaFiles("src/main/scala").flatMap { f =>
-        val text = Files.readString(f)
-        re.findAllMatchIn(text).map { m =>
-          val owner = enclosingDef.findAllMatchIn(text.take(m.start))
-            .map(_.group(1)).toSeq.lastOption.getOrElse("")
-          s"${Paths.get("src/main/scala").relativize(f)}:$owner"
-        }
-      }.sorted
-    }
     val splits = sites("random" + """Split\(""")
     assert(splits == Seq("graft/ml/Classifiers.scala:heldOut"),
       s"randomSplit at $splits")
     val tuners = sites("""new\s+""" + "TrainValidationSplit")
     assert(tuners == Seq("graft/ml/Classifiers.scala:tvsGrid"),
       s"TrainValidationSplit built at $tuners")
+  }
+
+  test("ALS is built in one place, its blocks sized there") {
+    // fitAls and fitAlsGrid share Recsys.als, the only site that sets the
+    // block count. Split literals, so this file does not match its own scan.
+    val builder = Seq("graft/ml/Recsys.scala:als")
+    val built = sites("""new\s+""" + """ALS\(""")
+    assert(built == builder, s"ALS built at $built")
+    val blocks = sites("setNum" + "Blocks")
+    assert(blocks == builder, s"setNumBlocks at $blocks")
   }
 
   test("oracle SQL never references fixture paths or engine internals") {
