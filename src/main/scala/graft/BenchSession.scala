@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session definition for every main ([[Bench]], [[PlanStamp]],
-  * [[Verify]], [[Explain]], [[StreamDemo]], [[graft.ml.ReferenceAls]])
+  * [[Verify]], [[Explain]], [[graft.ml.ReferenceAls]])
   * and the test harness, plus the between-runs
   * cache release. One definition because the configuration the oracle
   * checks (Verify) and the plans the gate stamps (PlanStamp) must be the
@@ -26,7 +26,9 @@ object BenchSession {
     Runtime.getRuntime.availableProcessors.toString)
 
   /** local[cpus] with cpus-sized shuffle partitioning, AQE + partition
-    * coalescing, the graft SQL extensions, UTC, UI off. */
+    * coalescing, UTC, UI off. No extension or function registration:
+    * graft's custom expressions are bound as Columns
+    * ([[graft.functions.VectorFunctions]]). */
   def build(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -64,7 +66,6 @@ object BenchSession {
       // shuffle shape; this only stops tiny local runs from taking the
       // small-R detour the real deploy never takes.
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // (r21: KryoSerializer for the RDD-path shuffles was measured —
       // qml50 8.5s vs 8.1s, qml58 10.9s vs 10.7s, i.e. no win at these
       // block sizes — and deliberately NOT adopted.)

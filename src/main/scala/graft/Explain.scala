@@ -14,11 +14,6 @@ object Explain {
     // from debugCodegen — disable it in --codegen mode only
     if (args.contains("--codegen"))
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // extension sanity: the custom functions must already be resolvable
-    // here, injected at session build time by GraftExtensions — before
-    // any query's VectorFunctions.register check runs
-    println("[explain] graft_cosine_sim injected via spark.sql.extensions: " +
-      spark.catalog.functionExists(graft.functions.VectorFunctions.CosineName))
     if (args.contains("--codegen")) {
       // dump whole-stage-codegen subtrees + generated Java — used to
       // confirm custom expressions stay inside codegen stages

@@ -7,8 +7,8 @@ import graft.ops.RelationalOps
   * full DuckDB oracles — the reference's metric surface, checkable
   * without vector columns. The ROC-AUC uses the rank-sum (Mann–Whitney)
   * formulation with average ranks for ties, computed DISTRIBUTED: row
-  * ranks come from a range-partitioned sort + zipWithIndex
-  * ([[RelationalOps.zipWithRank]]), never a no-partition window, and the
+  * ranks come from a range-partitioned sort + per-partition offsets
+  * ([[RelationalOps.zipWithPrefixSum]]), never a no-partition window, and the
   * tie-averaging makes the result independent of the tiebreak order.
   */
 object MetricsQueries {
@@ -54,7 +54,7 @@ object MetricsQueries {
           .select(col("l_extendedprice").cast("double").as("score"),
             when(col("l_quantity") >= 25, 1.0).otherwise(0.0).as("y"))
         // Mann–Whitney AUC with average ranks: rank every row by score
-        // (distributed sort + zipWithIndex), average ranks within tied
+        // (distributed sort + offsets), average ranks within tied
         // scores (makes the tiebreak irrelevant), sum over positives.
         // r21 shape: ONE group-level aggregation instead of re-joining
         // the per-row rank frame onto its own score groups — the old
@@ -68,7 +68,7 @@ object MetricsQueries {
         // oracle hash is unchanged, not merely close.
         // r22 shape: aggregate FIRST, rank never touches a row. The old
         // shape globally sorted every ROW (zipWithRank: range sort +
-        // zipWithIndex over |lineitem|) only for avg(rn) per score group
+        // offsets over |lineitem|) only for avg(rn) per score group
         // — but the average of the consecutive ranks a score group
         // occupies is fully determined by how many rows precede it:
         // arank_g = cnt_before_g + (n_g+1)/2. So group by score (the

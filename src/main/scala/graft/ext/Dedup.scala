@@ -68,20 +68,22 @@ object Dedup {
     // keeps it separate because the alias is non-cheap and referenced
     // more than once downstream.
     val toked = df.select(col(idCol), split(col(textCol), " ").as("__toks"))
-    val toks = col("__toks")
-    // docs shorter than n tokens emit NO start positions, so the sub-n
-    // stub the old post-explode filter removed is never constructed —
-    // that filter RE-SPLIT every emitted shingle string to count its
-    // tokens, a second O(len) string pass per shingle that profiled at
-    // a third of the whole shingling stage (guide §1: the only rows it
-    // could ever drop are the one-per-short-doc stubs, exactly what the
-    // guarded sequence excludes). For size >= n every slice is exactly
-    // n tokens by construction, so output is identical.
+    toked.select(col(idCol),
+      explode(shingleSet(col("__toks"), n)).as("shingle"))
+  }
+
+  /** The distinct word n-grams of one tokenized document, as an array —
+    * the shingle semantics [[shingles]] and [[minhashBucketsRowLocal]]
+    * share. Docs shorter than n tokens emit NO start positions, so no
+    * sub-n stub is ever constructed (a post-explode filter removing them
+    * re-split every shingle string to count its tokens, a second O(len)
+    * pass per shingle that profiled at a third of the shingling stage);
+    * for size >= n every slice is exactly n tokens by construction. */
+  private def shingleSet(toks: Column, n: Int): Column = {
     val starts = when(size(toks) >= n, sequence(lit(0), size(toks) - n))
       .otherwise(array().cast("array<int>"))
-    toked.select(col(idCol),
-        explode(array_distinct(transform(starts,
-          i => array_join(slice(toks, i + 1, lit(n)), " ")))).as("shingle"))
+    array_distinct(transform(starts,
+      i => array_join(slice(toks, i + 1, lit(n)), " ")))
   }
 
   /** Pairwise Jaccard over shingle sets: inverted-index self-join on the
@@ -129,7 +131,7 @@ object Dedup {
 
   /** Shingle → integer id. Dictionary path: rank-by-sort (deterministic in
     * any engine → DuckDB-checkable), built with a distributed sort +
-    * zipWithIndex ([[RelationalOps.zipWithRank]]) — NOT a no-partition
+    * offsets ([[RelationalOps.zipWithRank]]) — NOT a no-partition
     * Window, which would funnel every distinct shingle through one task.
     * Production path: xxhash64 (row-local, no global sort; collisions
     * negligible at 2^-64). */
@@ -237,16 +239,9 @@ object Dedup {
     // 3.8s vs 0.5–0.7s for this stage at sf0.1/32c (guide §1.2, §4).
     val toked = docs.select(col(idCol), split(col(textCol), " ").as("__toks"))
       .filter(size(col("__toks")) >= n)
-    val toks = col("__toks")
-    // same guarded-sequence construction as [[shingles]] (one source of
-    // truth for the semantics, pinned equal by OpsSpec); the filter
-    // above makes the empty branch unreachable here, keeping it keeps
-    // the expression shared verbatim with [[shingles]]
-    val starts = when(size(toks) >= n, sequence(lit(0), size(toks) - n))
-      .otherwise(array().cast("array<int>"))
-    val shingleArr = array_distinct(transform(starts,
-      i => array_join(slice(toks, i + 1, lit(n)), " ")))
-    val sids = transform(shingleArr,
+    // the same shingle set as [[shingles]] (pinned equal by OpsSpec); the
+    // filter above makes its empty branch unreachable here
+    val sids = transform(shingleSet(col("__toks"), n),
       s => pmod(xxhash64(s), lit(MinhashPrime)))
     // all numHashes minima in ONE fused codegen pass over the sid array
     // (functions.MinhashMins) instead of numHashes separate interpreted
@@ -254,7 +249,6 @@ object Dedup {
     // parameters and min semantics are identical (one hash family,
     // MinhashParams; composition equality vs the exploded aggregation
     // path pinned in OpsSpec), only the evaluation fuses (guide §4)
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val mins = (0 until numHashes).map { i =>
       element_at(col("__mins"), i + 1).as(s"mh_$i")
     }

@@ -56,7 +56,6 @@ object Similarity {
     */
   def cosineTopK(queries: DataFrame, index: DataFrame, idCol: String,
                  vecCol: String, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"),
       asDouble(col(vecCol)).as("qv"))
     val x = index.select(col(idCol).as("neighbor_id"),
@@ -76,7 +75,6 @@ object Similarity {
     * audits of [[cosinePairsLsh]]; never the registered scale path. */
   def cosinePairsBruteForce(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val e = df.select(col(idCol), asDouble(col(vecCol)).as("v"))
     val a = e.select(col(idCol).as("id_a"), col("v").as("va"))
     val b = e.select(col(idCol).as("id_b"), col("v").as("vb"))
@@ -99,7 +97,6 @@ object Similarity {
                      dims: Int, bands: Int, bitsPerBand: Int,
                      threshold: Double,
                      maxBucketSize: Int = 1000): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     // `e` feeds the banding pass AND both exact-rescore joins; `banded`
     // feeds the size count and both candidate self-join sides — persist
     // each once so the hyperplane hashing (O(bands·bits·dims) per row)
@@ -139,7 +136,6 @@ object Similarity {
   def lshBucketedTopK(df: DataFrame, idCol: String, vecCol: String,
                       dims: Int, nBits: Int, k: Int,
                       maxBucketSize: Int = 1000): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     // persist the bucketed frame: the size count and both in-bucket join
     // sides consume it — the hyperplane hashing must run once per row,
     // not once per consumer
@@ -174,7 +170,6 @@ object Similarity {
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
               queryPred: Column, nLists: Int, nProbe: Int, k: Int,
               seed: Long = 1L): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     // persist `e`: the iterative KMeans fit and the assignment transform

@@ -31,7 +31,7 @@ object TextAnalysis {
   /** BPE-ish subword segmentation count: runs of letters, runs of digits,
     * or single other non-space chars — the standard pre-tokenizer shape. */
   def bpeishCount(text: Column): Column =
-    size(call_function("regexp_extract_all", text,
+    size(regexp_extract_all(text,
       lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0)))
 
   /** Marker word lists per language (tiny n-gram-heuristic language ID:
@@ -116,7 +116,7 @@ object TextAnalysis {
   }
 
   /** Global token dictionary (token → dense id by sorted rank), built with
-    * a distributed sort + zipWithIndex ([[RelationalOps.zipWithRank]]) —
+    * a distributed sort + offsets ([[RelationalOps.zipWithRank]]) —
     * no single-partition Window. The dictionary is the oracle-parity path;
     * production uses xxhash64 per token and skips the global sort. */
   def tokenDict(df: DataFrame, textCol: String): DataFrame =

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
   Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity over two
@@ -296,113 +295,22 @@ object MinhashParams {
     Math.floorMod(mix64(2L * i + 1), Prime))
 }
 
-/** Session-extension entry point: injects the engine's custom functions
-  * at session build time — the deployment path for a cluster
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`), where every
-  * session gets the functions without any runtime registration call.
-  * [[VectorFunctions.register]] installs them only on sessions built
-  * without the extension. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier(VectorFunctions.CosineName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[CosineSimilarity].getName, VectorFunctions.CosineName),
-      VectorFunctions.cosineBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier(VectorFunctions.LshName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SignLshBands].getName, VectorFunctions.LshName),
-      VectorFunctions.lshBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier(VectorFunctions.MinhashName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinhashMins].getName, VectorFunctions.MinhashName),
-      VectorFunctions.minhashBuilder))
-  }
-}
-
+/** Column wrappers over the fused expressions: each builds its Catalyst
+  * expression directly, so it works on any session with no setup and
+  * no function-registry name can change what it computes. */
 object VectorFunctions {
+  import org.apache.spark.sql.graft.ExpressionBridge.{column, expression}
 
-  val CosineName = "graft_cosine_sim"
-
-  /** Shared builder with an arity check: silently dropping extra args
-    * (or throwing IndexOutOfBounds on too few) would be a wrong-result /
-    * unreadable-error hazard for SQL users of the injected function. */
-  private[graft] val cosineBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case exprs => throw new IllegalArgumentException(
-      s"$CosineName expects exactly 2 arguments (array<double>, " +
-        s"array<double>); got ${exprs.length}")
-  }
-
-  val LshName = "graft_lsh_bands"
-
-  private[graft] val lshBuilder: Seq[Expression] => Expression = {
-    case Seq(v, nb, bpb) => SignLshBands(v, nb, bpb)
-    case exprs => throw new IllegalArgumentException(
-      s"$LshName expects exactly 3 arguments (array<double>, bands, " +
-        s"bitsPerBand); got ${exprs.length}")
-  }
-
-  val MinhashName = "graft_minhash_mins"
-
-  private[graft] val minhashBuilder: Seq[Expression] => Expression = {
-    case Seq(s, nh) => MinhashMins(s, nh)
-    case exprs => throw new IllegalArgumentException(
-      s"$MinhashName expects exactly 2 arguments (array<long>, " +
-        s"numHashes); got ${exprs.length}")
-  }
-
-  /** True iff all graft_ names resolve to OUR builder instances in the
-    * session's registry. Identity (eq), not mere existence: a foreign
-    * `CREATE OR REPLACE TEMPORARY FUNCTION` squatting on a graft_ name
-    * must be healed exactly like a drop — name existence alone would
-    * silently keep it and corrupt every similarity score. */
-  private def bound(spark: SparkSession): Boolean = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(CosineName -> cosineBuilder, LshName -> lshBuilder,
-        MinhashName -> minhashBuilder).forall {
-      case (n, b) =>
-        reg.lookupFunctionBuilder(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(n))
-          .exists(_ eq b)
-    }
-  }
-
-  /** Install the expressions in the session's function registry (public
-    * Catalyst API — Column-from-Expression constructors are private[sql]
-    * in Spark 4, so resolution goes through `call_function` instead).
-    * Idempotent check-then-install, called per query build: a no-op on
-    * sessions built with [[GraftExtensions]] (the names already resolve
-    * to the shared builders), so nothing is re-registered and nothing
-    * logs a replace. A session without the extension, or one where a
-    * graft_ name was dropped or replaced, is (re)installed under the
-    * lock, replacing any squatter rather than keeping it. */
-  def register(spark: SparkSession): Unit =
-    if (!bound(spark)) registerLock.synchronized {
-      if (!bound(spark)) {
-        val reg = spark.sessionState.functionRegistry
-        reg.createOrReplaceTempFunction(CosineName, cosineBuilder, "internal")
-        reg.createOrReplaceTempFunction(LshName, lshBuilder, "internal")
-        reg.createOrReplaceTempFunction(MinhashName, minhashBuilder, "internal")
-      }
-    }
-
-  private val registerLock = new Object
-
-  /** Column wrapper: fused codegen cosine similarity. Requires
-    * [[register]] to have run on the executing session. */
+  /** Fused codegen cosine similarity ([[CosineSimilarity]]). */
   def cosineSim(a: Column, b: Column): Column =
-    call_function(CosineName, a, b)
+    column(CosineSimilarity(expression(a), expression(b)))
 
-  /** Column wrapper: fused codegen sign-LSH band buckets. Requires
-    * [[register]] to have run on the executing session. */
+  /** Fused codegen sign-LSH band buckets ([[SignLshBands]]). */
   def lshBands(vec: Column, bands: Column, bitsPerBand: Column): Column =
-    call_function(LshName, vec, bands, bitsPerBand)
+    column(SignLshBands(expression(vec), expression(bands),
+      expression(bitsPerBand)))
 
-  /** Column wrapper: fused codegen minhash signature minima. Requires
-    * [[register]] to have run on the executing session. */
+  /** Fused codegen minhash signature minima ([[MinhashMins]]). */
   def minhashMins(sids: Column, numHashes: Column): Column =
-    call_function(MinhashName, sids, numHashes)
+    column(MinhashMins(expression(sids), expression(numHashes)))
 }

@@ -80,68 +80,56 @@ object RelationalOps {
   /** Deterministic dense rank ids for (already-distinct) rows of `df` in
     * `sortCols` order, WITHOUT a no-partition `Window.orderBy` (which
     * funnels every row through a single task — a scale-killer for
-    * shingle/token dictionaries). Here the sort is a distributed
-    * range-partitioned sort and ids come from `zipWithIndex` (per-partition
-    * offsets, one extra size-collect job); ids are identical to
-    * `row_number() OVER (ORDER BY sortCols)` + (startAt−1) because the
-    * global order is the sort order regardless of partition boundaries.
-    *
-    * `sortCols` must be a TOTAL order over `df`'s rows (all call sites
-    * rank distinct keys, or break frequency ties by the key) — required
-    * for the ids to be well-defined at all, and it is also what makes the
-    * no-cache lifecycle below deterministic across re-executions.
-    *
-    * Lifecycle (the round-3→5 leak, fixed): nothing is persisted.
-    * `zipWithIndex` launches its per-partition size job over the parent
-    * before the mapped RDD is ever consumed; that job computes the full
-    * lineage once and registers every shuffle's map outputs with the
-    * MapOutputTracker. Because later consumers run over the SAME RDD
-    * object (same shuffle dependencies), the DAGScheduler skips the
-    * already-computed map stages — the corpus scan / distinct shuffle
-    * above the dictionary never re-runs; only the reduce-side
-    * per-partition sort of the (much smaller, post-distinct) dictionary
-    * is recomputed per consumer. Bounded re-work instead of unbounded
-    * cache-block accumulation across queries in a long-lived session. */
+    * shingle/token dictionaries): row i's `out` = `startAt` + the number
+    * of rows before it ([[sortedOffsets]] with weight 1), identical to
+    * `row_number() OVER (ORDER BY sortCols)` + (startAt−1). */
   def zipWithRank(df: DataFrame, sortCols: Seq[Column], out: String,
-                  startAt: Long = 1L): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df.sort(sortCols: _*)
-    val schema = sorted.schema.add(out, LongType, nullable = false)
-    val sortedRdd = sorted.rdd
-    val rows = sortedRdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ (i + startAt))
-    }
-    spark.createDataFrame(rows, schema)
-  }
+                  startAt: Long = 1L): DataFrame =
+    sortedOffsets(df, sortCols, out, startAt)(_ => 1L)
 
   /** EXCLUSIVE running prefix sum of long column `weight` in `sortCols`
-    * order, without a no-partition window (the [[zipWithRank]] design):
-    * distributed range sort, one bounded job collecting a single per-
-    * partition weight total, then a map attaching offset + running local
-    * sum. Row i's `out` = Σ weight over all rows STRICTLY before it in
-    * the sort order. `sortCols` must totally order the rows (same
-    * contract as zipWithRank), and the lifecycle note there applies
-    * verbatim: the offsets job registers every upstream shuffle's map
-    * outputs, so the final pass re-runs only the reduce-side sort. */
+    * order: row i's `out` = Σ weight over all rows STRICTLY before it in
+    * the sort order ([[sortedOffsets]]). */
   def zipWithPrefixSum(df: DataFrame, sortCols: Seq[Column], weight: String,
                        out: String): DataFrame = {
+    val idx = df.schema.fieldIndex(weight)
+    sortedOffsets(df, sortCols, out, 0L)(_.getLong(idx))
+  }
+
+  /** `df` sorted by `sortCols` with `out` = `start` + Σ `weight` over the
+    * rows before each row: a distributed range sort, one bounded job
+    * collecting a single weight total per partition (all but the last,
+    * whose rows precede no partition — as `zipWithIndex` does), then a
+    * map adding each partition's offset to its running local sum. The
+    * global order is the sort order regardless of partition boundaries,
+    * so `sortCols` must totally order the rows (all callers order
+    * distinct keys, or break ties by the key) for `out` to be
+    * well-defined and for the lifecycle below to be deterministic
+    * across re-executions.
+    *
+    * Lifecycle: nothing is persisted. The upstream shuffles' map outputs
+    * are computed once and registered; the offsets job and the final
+    * pass run over the SAME RDD (same shuffle dependencies), so the
+    * DAGScheduler skips those map stages and re-runs only the
+    * reduce-side sort — bounded re-work instead of cache blocks
+    * accumulating across queries in a long-lived session. */
+  private def sortedOffsets(df: DataFrame, sortCols: Seq[Column],
+                            out: String, start: Long)(
+      weight: Row => Long): DataFrame = {
     val spark = df.sparkSession
     val sorted = df.sort(sortCols: _*)
     val schema = sorted.schema.add(out, LongType, nullable = false)
-    val idx = sorted.schema.fieldIndex(weight)
     val sortedRdd = sorted.rdd
-    val partSums = sortedRdd.mapPartitionsWithIndex { case (i, it) =>
-      var s = 0L
-      it.foreach(r => s += r.getLong(idx))
-      Iterator((i, s))
-    }.collect().sortBy(_._1).map(_._2) // bounded: one long per partition
-    val offsets = partSums.scanLeft(0L)(_ + _)
+    val partSums = spark.sparkContext.runJob(sortedRdd,
+      (it: Iterator[Row]) => it.foldLeft(0L)(_ + weight(_)),
+      0 until sortedRdd.getNumPartitions - 1)
+    val offsets = partSums.scanLeft(start)(_ + _)
     val bc = spark.sparkContext.broadcast(offsets)
     val rows = sortedRdd.mapPartitionsWithIndex { case (i, it) =>
       var run = bc.value(i)
       it.map { r =>
         val before = run
-        run += r.getLong(idx)
+        run += weight(r)
         Row.fromSeq(r.toSeq :+ before)
       }
     }

@@ -232,65 +232,53 @@ class ExtSpec extends AnyFunSuite {
     assert(math.abs(pairs((1L, 3L)) - 0.707107) < 1e-6)
   }
 
-  test("graft_ functions resolve to our builders before and after register") {
-    import graft.functions.VectorFunctions._
-    val ours = Seq(CosineName -> cosineBuilder, LshName -> lshBuilder,
-      MinhashName -> minhashBuilder)
-    def resolvesToOurs(s: org.apache.spark.sql.SparkSession): Boolean =
-      ours.forall { case (name, builder) =>
-        s.sessionState.functionRegistry.lookupFunctionBuilder(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-          .exists(_ eq builder)
-      }
-    // a new session of the shared context has seen no register call, so
-    // only the session extension can have bound the names
-    for (s <- Seq(spark.newSession(), spark)) {
-      assert(resolvesToOurs(s), "extension did not inject our builders")
-      register(s)
-      assert(resolvesToOurs(s), "register replaced our builders")
+  test("fused expressions ignore the session's function registry") {
+    // the kernels are bound as Columns, so no graft_ name is ever looked
+    // up: squatting or dropping one in a session changes no result there
+    val vecs = Seq((1L, Seq(0.3, -1.2, 0.7, 2.2)),
+      (2L, Seq(-0.5, 0.4, -0.1, 0.9)), (3L, Seq(1.0, 1.0, 1.0, 1.0)))
+    val texts = Seq(1L -> "a b c d e f", 2L -> "a b c d e g",
+      3L -> "q r s t u v")
+    type S = org.apache.spark.sql.SparkSession
+    def cosines(s: S) = {
+      val v = s.createDataFrame(vecs).toDF("id", "v")
+      v.as("x").crossJoin(v.as("y"))
+        .select(col("x.id"), col("y.id"),
+          Similarity.cosine(col("x.v"), col("y.v")))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sorted.toSeq
     }
-  }
-
-  test("graft_cosine_sim rejects wrong arity with a clear error") {
-    graft.functions.VectorFunctions.register(spark)
-    val e1 = intercept[Exception] {
-      spark.sql("SELECT graft_cosine_sim(array(1.0d))").collect()
-    }
-    assert(e1.getMessage.contains("expects exactly 2"))
-    val e3 = intercept[Exception] {
-      spark.sql(
-        "SELECT graft_cosine_sim(array(1.0d), array(1.0d), array(1.0d))")
-        .collect()
-    }
-    assert(e3.getMessage.contains("expects exactly 2"))
-  }
-
-  test("register replaces a foreign builder squatting on a graft_ name") {
-    // ADVICE r16: skip-if-resolves silently kept a stale/foreign function
-    // under graft's reserved names. The contract: register always leaves
-    // the graft_ names bound to OUR builders — replacing a pre-existing
-    // squatter, healing a post-latch foreign replace (identity probe,
-    // not mere existence), and healing a user DROP.
+    def bands(s: S) =
+      s.createDataFrame(vecs).toDF("id", "v")
+        .select(col("id"), Similarity.lshBandBuckets(col("v"), 4, 3, 5))
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1)
+        .toSeq
+    def buckets(s: S) =
+      Dedup.minhashBucketsRowLocal(s.createDataFrame(texts)
+          .toDF("doc_id", "text"), "doc_id", "text", 3, 8, 2)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+        .sorted.toSeq
+    val kernels = Seq[(String, S => Seq[Any])]("cosine" -> cosines,
+      "lshBandBuckets" -> bands, "minhashBucketsRowLocal" -> buckets)
+    val expected = kernels.map { case (_, f) => f(spark) }
+    assert(expected(2).nonEmpty)
     val s2 = spark.newSession()
-    def squat(): Unit =
-      s2.sessionState.functionRegistry.createOrReplaceTempFunction(
-        graft.functions.VectorFunctions.CosineName,
+    val names = Seq("graft_cosine_sim", "graft_lsh_bands",
+      "graft_minhash_mins")
+    def check(step: String): Unit =
+      kernels.zip(expected).foreach { case ((k, f), want) =>
+        assert(f(s2) == want, s"$k changed after the graft_ names were $step")
+      }
+    names.foreach(n =>
+      s2.sessionState.functionRegistry.createOrReplaceTempFunction(n,
         _ => org.apache.spark.sql.catalyst.expressions.Literal(-99.0),
-        "scala_udf")
-    val sql = "SELECT graft_cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c"
-    def check(): Unit = {
-      graft.functions.VectorFunctions.register(s2)
-      assert(math.abs(s2.sql(sql).head.getDouble(0) - 1.0) < 1e-12)
-    }
-    squat(); check()          // pre-latch squatter replaced
-    check()                   // repeat call: lock-free fast path, still ours
-    squat(); check()          // post-latch foreign replace healed
-    s2.sql(s"DROP TEMPORARY FUNCTION ${graft.functions.VectorFunctions.CosineName}")
-    check()                   // user DROP healed on the next register
+        "scala_udf"))
+    check("squatted")
+    names.foreach(n => s2.sql(s"DROP TEMPORARY FUNCTION $n"))
+    check("dropped")
   }
 
   test("native codegen cosine == HOF cosine bit-for-bit") {
-    graft.functions.VectorFunctions.register(spark)
     val rnd = new scala.util.Random(3)
     val vecs = (1 to 50).map(_ => (Seq.fill(64)(rnd.nextGaussian()),
       Seq.fill(64)(rnd.nextGaussian()))).toDF("a", "b")
@@ -303,7 +291,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("native lsh band hashing == HOF formulation bit-for-bit") {
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Seq((1L, Seq(0.3, -1.2, 0.7, 2.2)),
         (2L, Seq(-0.5, 0.4, -0.1, 0.9)), (3L, Seq(1.0, 1.0, 1.0, 1.0)),
         (4L, Seq(-2.0, -0.01, 3.5, 0.0)))
@@ -316,9 +303,6 @@ class ExtSpec extends AnyFunSuite {
     both.foreach { case (id, n, h) =>
       assert(n == h, s"id=$id native=$n hof=$h")
     }
-    val err = intercept[Exception](
-      spark.sql("SELECT graft_lsh_bands(array(1.0D))").collect())
-    assert(err.getMessage.contains("3 arguments"))
   }
 
   test("cosineTopK: at most k neighbors per query, scores non-increasing") {

@@ -85,6 +85,22 @@ class RegistrySpec extends AnyFunSuite {
     assert(gone.isEmpty, s"removed cache/hot-key API named in $gone")
   }
 
+  test("custom expressions are bound in one place") {
+    // VectorFunctions builds each kernel's Column from its Catalyst
+    // expression through ExpressionBridge: no name is registered or looked
+    // up, and no session extension is installed. Split literals, so this
+    // file does not match its own scan.
+    val registry = filesWith(Seq("src/main/scala"),
+      "call_" + "function|function" + "Registry|inject" + "Function|" +
+        """spark\.sql\.""" + "extensions|Graft" + "Extensions")
+    assert(registry.isEmpty, s"function registry reached from $registry")
+    val inSpark = Seq("src/main/scala", "src/test/scala").flatMap(scalaFiles)
+      .map(_.toString).filter(_.contains("org/apache/spark/sql"))
+    assert(inSpark == Seq(
+        "src/main/scala/org/apache/spark/sql/graft/ExpressionBridge.scala"),
+      s"files inside Spark's package: $inSpark")
+  }
+
   /** Every match of `pattern` under src/main, named by its file and the
     * last `def` above it. */
   private def sites(pattern: String): Seq[String] = {
