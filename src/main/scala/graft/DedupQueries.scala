@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 import graft.ops.RelationalOps.{materialized, withMaterialized}
@@ -16,6 +17,14 @@ object DedupQueries {
     """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       |sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
       |       FROM toks, unnest(generate_series(1, len(t)-2)) AS u(i)),""".stripMargin
+
+  /** The Jaccard pairs of `docs`' word 3-gram shingle sets at or above
+    * `minJaccard` — the near-dup pair set every pair/cluster query reads
+    * (its oracle is [[PairsCte]]). */
+  private def nearDupPairs(docs: DataFrame, minJaccard: Double): DataFrame =
+    Dedup.jaccardPairs(Dedup.shingles(docs, "doc_id", "text", 3), "doc_id",
+        maxDf = 1000L)
+      .filter(col("jaccard") >= minJaccard)
 
   /** The minhash parameters as a VALUES list, generated from the SAME
     * `Dedup.hashParams` the Spark path uses — one source of truth, so an
@@ -75,9 +84,7 @@ object DedupQueries {
     // ---- n-gram Jaccard near-dup pairs ----------------------------------
     GQuery("q31_dedup_jaccard",
       (s, d) => {
-        val sh = Dedup.shingles(Tables.documents(s, d), "doc_id", "text", 3)
-        Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.5)
+        nearDupPairs(Tables.documents(s, d), 0.5)
           .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
           .orderBy("id_a", "id_b")
       },
@@ -95,9 +102,7 @@ object DedupQueries {
     // ---- duplicate-cluster formation (connected components) -------------
     GQuery("q71_dedup_clusters",
       (s, d) => {
-        val sh = Dedup.shingles(Tables.documents(s, d), "doc_id", "text", 3)
-        val pairs = Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.5)
+        val pairs = nearDupPairs(Tables.documents(s, d), 0.5)
           .select(col("id_a"), col("id_b"))
         Dedup.connectedComponents(pairs, "id_a", "id_b")
           .select(col("id").as("doc_id"), col("label").as("cluster"),
@@ -132,10 +137,7 @@ object DedupQueries {
     GQuery("q72_dedup_compact",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val sh = Dedup.shingles(docs, "doc_id", "text", 3)
-        val pairs = Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.5)
-          .select(col("id_a"), col("id_b"))
+        val pairs = nearDupPairs(docs, 0.5).select(col("id_a"), col("id_b"))
         // non-canonical cluster members are the rows to drop; LEFT ANTI
         // keeps the corpus scan single-pass and never materializes the
         // (much larger) kept side
@@ -178,7 +180,7 @@ object DedupQueries {
     GQuery("q32_dedup_minhash",
       (s, d) => {
         val sh  = Dedup.shingles(Tables.documents(s, d), "doc_id", "text", 3)
-        val ids = Dedup.shingleIds(sh, useDictionaryIds = true)
+        val ids = Dedup.shingleIds(sh)
         val bk  = Dedup.minhashBuckets(ids, "doc_id", numHashes = 16,
           rowsPerBand = 4)
         Dedup.minhashCandidates(bk, "doc_id").orderBy("id_a", "id_b")
@@ -194,8 +196,8 @@ object DedupQueries {
     // ---- MinHash production path: xxhash64 shingle ids, no dictionary ---
     GQuery("q87_minhash_production",
       (s, d) => {
-        // The PRODUCTION minhash path (`useDictionaryIds = false`,
-        // Dedup.shingleIds): shingles keyed by row-local xxhash64 — no
+        // The PRODUCTION minhash path (Dedup.minhashBucketsRowLocal):
+        // shingles keyed by row-local xxhash64 — no
         // global dictionary, no distributed sort, one fewer shuffle
         // than the oracle-parity path q32 runs. DuckDB cannot replicate
         // xxhash64, so the oracle checks the CLAIM instead of the hash
@@ -217,11 +219,7 @@ object DedupQueries {
           Dedup.minhashBucketsRowLocal(docs, "doc_id", "text",
             n = 3, numHashes = 24, rowsPerBand = 3),
           "doc_id")
-        val truth = Dedup
-          .jaccardPairs(Dedup.shingles(docs, "doc_id", "text", 3),
-            "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.9)
-        truth
+        nearDupPairs(docs, 0.9)
           .select(col("id_a"), col("id_b"),
             round(col("jaccard"), 6).as("jaccard"))
           .join(prod.withColumn("caught", lit(true)),
@@ -260,7 +258,7 @@ object DedupQueries {
             .select(col("id_a"), col("id_b"),
               round(col("jaccard"), 6).as("jaccard"))
           val mh = Dedup.minhashCandidates(
-            Dedup.minhashBuckets(Dedup.shingleIds(sh, useDictionaryIds = true),
+            Dedup.minhashBuckets(Dedup.shingleIds(sh),
               "doc_id", numHashes = 16, rowsPerBand = 4),
             "doc_id")
           materialized(
@@ -294,7 +292,7 @@ object DedupQueries {
         val toks = Tables.documents(s, d)
           .select(col("doc_id"),
             explode(array_distinct(split(col("text"), " "))).as("shingle"))
-        val ids = Dedup.shingleIds(toks, useDictionaryIds = true)
+        val ids = Dedup.shingleIds(toks)
         val sh  = Dedup.simhash(ids, "doc_id", bits = 16)
         Dedup.simhashPairs(sh, "doc_id", maxHamming = 2)
           .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
@@ -374,10 +372,7 @@ object DedupQueries {
         // the labels the siding actually used ever disagree with the
         // pair graph.
         val docs = Tables.documents(s, d)
-        val sh = Dedup.shingles(docs, "doc_id", "text", 3)
-        val pairs = Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.5)
-          .select(col("id_a"), col("id_b"))
+        val pairs = nearDupPairs(docs, 0.5).select(col("id_a"), col("id_b"))
         val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
           .withColumnRenamed("id", "doc_id")
         val labeled = docs.select("doc_id")
@@ -446,10 +441,7 @@ object DedupQueries {
         // partitioned by cluster, so no global sort, and only one row
         // per cluster survives the shuffle.
         val docs = Tables.documents(s, d)
-        val sh = Dedup.shingles(docs, "doc_id", "text", 3)
-        val pairs = Dedup.jaccardPairs(sh, "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.5)
-          .select(col("id_a"), col("id_b"))
+        val pairs = nearDupPairs(docs, 0.5).select(col("id_a"), col("id_b"))
         val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
           .withColumnRenamed("id", "doc_id")
         val scored = docs
@@ -605,10 +597,7 @@ object DedupQueries {
             n = 3, numHashes = 24, rowsPerBand = 3),
           "doc_id")
         val odd = pmod(col("id_a"), lit(2)) === 1
-        val truth = Dedup
-          .jaccardPairs(Dedup.shingles(docs, "doc_id", "text", 3),
-            "doc_id", maxDf = 1000L)
-          .filter(col("jaccard") >= 0.9)
+        val truth = nearDupPairs(docs, 0.9)
           .filter(pmod(col("id_a"), lit(2)) =!= pmod(col("id_b"), lit(2)))
           .select(
             when(odd, col("id_a")).otherwise(col("id_b")).as("new_id"),

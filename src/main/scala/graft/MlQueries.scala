@@ -372,11 +372,13 @@ object MlQueries {
         // persist once: four TVS grid harnesses otherwise re-run the
         // join + assemble + scaler-fit lineage for every grid point
         // (the reference's own missing-cache problem, SURVEY §4.1).
-        // Materialized BEFORE the concurrent harnesses below: otherwise
-        // all four race to compute the same uncached lineage and each
-        // misses the others' in-flight blocks (duplicate work, not
-        // wrong results)
+        // withMaterialized fills the cache on first use, so one count
+        // fills it BEFORE the concurrent harnesses below: left to them,
+        // all four race to fill it, which a job-counting listener saw
+        // cost more jobs than the count (sf0.01, 4 cores, three runs
+        // each: 176–178 jobs unfilled, 174–176 with the count included)
         val results = withMaterialized(labeled(s, d)) { df =>
+          df.count()
           // the four harnesses are INDEPENDENT eager evaluations over the
           // same cached frame — run them as concurrent driver threads so
           // each harness's straggler tail back-fills with the next

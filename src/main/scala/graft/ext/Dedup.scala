@@ -13,13 +13,15 @@ import graft.ops.RelationalOps
   *    the raw text (shuffle bytes = 16B/row + id);
   *  - shingling / hashing / signatures are row-local (explode + HOF, no
   *    shuffle until the band-bucket groupBy);
-  *  - LSH candidate generation shuffles (band, bucket) keys only; bucket
-  *    size is capped (`maxBucketSize`) so a degenerate bucket (all-equal
-  *    docs, boilerplate) cannot produce a quadratic pair explosion;
+  *  - every candidate generator that self-joins a bucket key (shingle,
+  *    LSH band bucket, SimHash segment) goes through [[bucketPairs]]: it
+  *    shuffles bucket keys only, and caps bucket size so a degenerate
+  *    bucket (all-equal docs, boilerplate) cannot produce a quadratic
+  *    pair explosion;
   *  - the *oracle-parity* shingle-id path uses a sorted dictionary (exact
-  *    cross-engine determinism); the *production* path keys shingles by
-  *    `xxhash64`, which needs no global dictionary and no sort — switch
-  *    with `useDictionaryIds=false`.
+  *    cross-engine determinism); the *production* path is
+  *    [[minhashBucketsRowLocal]], which keys shingles by `xxhash64` — no
+  *    global dictionary and no sort.
   */
 object Dedup {
 
@@ -87,60 +89,42 @@ object Dedup {
   }
 
   /** Pairwise Jaccard over shingle sets: inverted-index self-join on the
-    * shingle, count common, |A∪B| = |A|+|B|−common. A shingle shared by n
-    * docs emits O(n²) join rows, so shingles with document frequency >
-    * `maxDf` (stop-shingles: boilerplate headers, license blurbs) are
-    * dropped from the join — the standard stop-shingle guard; set sizes
-    * |A|,|B| stay the TRUE sizes so Jaccard is at worst underestimated for
-    * pairs sharing only boilerplate. Use [[minhashCandidates]] when even
-    * capped fan-out explodes.
+    * shingle ([[bucketPairs]]), count common, |A∪B| = |A|+|B|−common. A
+    * shingle shared by n docs emits O(n²) join rows, so shingles with
+    * document frequency > `maxDf` (stop-shingles: boilerplate headers,
+    * license blurbs) are dropped from the join — the standard
+    * stop-shingle guard; set sizes |A|,|B| stay the TRUE sizes so Jaccard
+    * is at worst underestimated for pairs sharing only boilerplate. Use
+    * [[minhashCandidates]] when even capped fan-out explodes.
     * Output: (id_a, id_b, common, n_a, n_b) with id_a < id_b. */
   def jaccardPairs(sh: DataFrame, idCol: String,
                    maxDf: Long = 1000L): DataFrame = {
-    // the shingle frame fans out four ways (sizes, stop list, both join
+    // the shingle frame fans out four ways (sizes, shingle df, both join
     // sides): persist it once
     RelationalOps.withMaterialized(sh) { s =>
       val sizes = s.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-      // The STOP list (df > maxDf) is tiny by construction — boilerplate
-      // shingles are few in distinct count — so an anti join against it is
-      // broadcast-eligible and the full shingle set is NOT re-shuffled
-      // (a semi join on the huge keep-list would shuffle everything twice).
-      val stop = s.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDf).select("shingle")
-      val pruned = s.join(stop, Seq("shingle"), "left_anti")
-      val a = pruned.select(col(idCol).as("id_a"), col("shingle"))
-      val b = pruned.select(col(idCol).as("id_b"), col("shingle"))
-      // SHUFFLE_HASH hint: post-explode size estimates are far below real
-      // cardinality, so Catalyst would otherwise BROADCAST the whole b-side
-      // shingle set (observed at sf0.1) — a driver OOM at scale. Hinting
-      // forces a shuffled hash join partitioned by shingle; both sides are
-      // identical subplans, so the exchange is reused.
       RelationalOps.materialized(
-        a.join(b.hint("shuffle_hash"), Seq("shingle"))
-          .filter(col("id_a") < col("id_b"))
+        bucketPairs(s, Seq("shingle"), idCol, maxDf)
           .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-          .join(sizes.withColumnRenamed(idCol, "id_a")
-            .withColumnRenamed("n_sh", "n_a"), Seq("id_a"))
-          .join(sizes.withColumnRenamed(idCol, "id_b")
-            .withColumnRenamed("n_sh", "n_b"), Seq("id_b"))
+          .join(sizes.select(col(idCol).as("id_a"), col("n_sh").as("n_a")),
+            Seq("id_a"))
+          .join(sizes.select(col(idCol).as("id_b"), col("n_sh").as("n_b")),
+            Seq("id_b"))
           .withColumn("jaccard",
             col("common").cast("double") /
               (col("n_a") + col("n_b") - col("common"))))
     }
   }
 
-  /** Shingle → integer id. Dictionary path: rank-by-sort (deterministic in
-    * any engine → DuckDB-checkable), built with a distributed sort +
-    * offsets ([[RelationalOps.zipWithRank]]) — NOT a no-partition
-    * Window, which would funnel every distinct shingle through one task.
-    * Production path: xxhash64 (row-local, no global sort; collisions
-    * negligible at 2^-64). */
-  def shingleIds(sh: DataFrame, useDictionaryIds: Boolean): DataFrame =
-    if (useDictionaryIds) {
-      val dict = RelationalOps.zipWithRank(
-        sh.select("shingle").distinct(), Seq(col("shingle")), "sid")
-      sh.join(dict, Seq("shingle"))
-    } else sh.withColumn("sid", xxhash64(col("shingle")))
+  /** Shingle → integer id by rank-by-sort (deterministic in any engine →
+    * DuckDB-checkable), built with a distributed sort + offsets
+    * ([[RelationalOps.zipWithRank]]) — NOT a no-partition Window, which
+    * would funnel every distinct shingle through one task. */
+  def shingleIds(sh: DataFrame): DataFrame = {
+    val dict = RelationalOps.zipWithRank(
+      sh.select("shingle").distinct(), Seq(col("shingle")), "sid")
+    sh.join(dict, Seq("shingle"))
+  }
 
   /** Parameters (a_i, b_i) of the i-th minhash h_i(x) = (a_i·x + b_i) mod p,
     * read from the one hash family [[graft.functions.MinhashParams]] that
@@ -164,9 +148,6 @@ object Dedup {
     * the joined band-signature string. */
   def minhashBuckets(shIds: DataFrame, idCol: String, numHashes: Int,
                      rowsPerBand: Int): DataFrame = {
-    require(numHashes % rowsPerBand == 0,
-      s"numHashes ($numHashes) must be a multiple of rowsPerBand " +
-        s"($rowsPerBand) — a partial band would silently drop hashes")
     require(numHashes <= MinhashParams.MaxHashes,
       s"numHashes ($numHashes) exceeds the hash family's " +
         s"${MinhashParams.MaxHashes} precomputed functions")
@@ -187,6 +168,9 @@ object Dedup {
     * (id, band, bucket) rows — row-local. */
   private def cutBands(sig: DataFrame, idCol: String, numHashes: Int,
                        rowsPerBand: Int): DataFrame = {
+    require(numHashes % rowsPerBand == 0,
+      s"numHashes ($numHashes) must be a multiple of rowsPerBand " +
+        s"($rowsPerBand) — a partial band would silently drop hashes")
     val bands = (0 until numHashes / rowsPerBand).map { bnd =>
       struct(lit(bnd).as("band"),
         concat_ws("_", (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
@@ -203,7 +187,7 @@ object Dedup {
     * aggregation shuffling |docs × shingles| rows. At corpus scale the
     * signature stage therefore costs one map pass over the data.
     *
-    * Exactly the [[shingles]] → [[shingleIds]](production) →
+    * Exactly the [[shingles]] → xxhash64 shingle ids →
     * [[minhashBuckets]] composition, row-fused: same shingle semantics
     * (distinct word n-grams, sub-n stubs dropped, docs with no valid
     * shingle emit no rows), same hash family ([[hashParams]]), same
@@ -213,9 +197,6 @@ object Dedup {
   def minhashBucketsRowLocal(docs0: DataFrame, idCol: String,
                              textCol: String, n: Int, numHashes: Int,
                              rowsPerBand: Int): DataFrame = {
-    require(numHashes % rowsPerBand == 0,
-      s"numHashes ($numHashes) must be a multiple of rowsPerBand " +
-        s"($rowsPerBand) — a partial band would silently drop hashes")
     // the numHashes×|shingles| hash evaluation below is the most
     // CPU-dense map stage in the engine (profiled ~3s single-threaded
     // at sf0.1): spread an underparallelized scan before it (guide
@@ -259,37 +240,57 @@ object Dedup {
     cutBands(sig, idCol, numHashes, rowsPerBand)
   }
 
-  /** LSH candidate pairs: docs sharing any (band, bucket). Buckets larger
-    * than `maxBucketSize` are dropped (boilerplate guard — at 100 TB a
-    * single all-identical-header bucket would otherwise emit O(n²) pairs).
+  /** The one bucket-pair stage behind every candidate generator that
+    * self-joins a bucket key: `members` holds one row per (bucket, member)
+    * keyed by `keys`. Buckets with 2..`maxBucketSize` members are kept —
+    * the one cap policy, a keep list: a singleton forms no pair, and one
+    * oversized bucket (boilerplate; at 100 TB an all-identical-header
+    * bucket) would emit O(n²) pairs. ONE self-join on `keys` then emits
+    * each same-bucket pair with `id_a < id_b`, once per shared bucket.
+    * Every other member column rides along onto both sides, suffixed
+    * `_a` / `_b`, so callers read their payload without joining it back.
+    * Output: (keys…, id_a, payload_a…, id_b, payload_b…).
     *
     * Deliberate shape: count-filter-then-self-join, NOT
     * `collect_list`-per-bucket with row-local pair explosion. The latter
     * would halve the lineage passes but materializes an entire bucket in
     * one aggregation buffer BEFORE any size filter can apply — an
     * executor OOM on exactly the degenerate buckets the cap exists for.
+    * `members` is read three times (size count, both join sides), so
+    * callers pass a frame they hold through
+    * [[RelationalOps.withMaterialized]]. SHUFFLE_HASH hint: post-explode
+    * size estimates are far below real cardinality, so Catalyst would
+    * otherwise BROADCAST a whole side (observed at sf0.1) — a driver OOM
+    * at scale; both sides are identical subplans, so the exchange is
+    * reused. */
+  private[ext] def bucketPairs(members: DataFrame, keys: Seq[String],
+                               idCol: String,
+                               maxBucketSize: Long): DataFrame = {
+    val k = keys.map(col)
+    val sized = members.groupBy(k: _*).agg(count(lit(1)).as("bsz"))
+      .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
+    val kept = members.join(sized.select(k: _*), keys)
+    val payload = members.columns
+      .filterNot(c => c == idCol || keys.contains(c))
+    val Seq(a, b) = Seq("a", "b").map(s => kept.select(k ++
+      (col(idCol).as(s"id_$s") +: payload.map(c => col(c).as(s"${c}_$s"))): _*))
+    a.join(b.hint("shuffle_hash"), keys).filter(col("id_a") < col("id_b"))
+  }
+
+  /** LSH candidate pairs: docs sharing any (band, bucket), through
+    * [[bucketPairs]] — buckets larger than `maxBucketSize` are dropped.
     * The (id, band, bucket) frame is bounded (one row per doc per band)
     * and spillable, so it is persisted once and every consumer — the size
     * count and both self-join sides — scans the cache: the expensive
     * lineage above it (shingles → dictionary → signature aggregation)
     * runs exactly once, not once per consumer. */
   def minhashCandidates(buckets: DataFrame, idCol: String,
-                        maxBucketSize: Int = 1000): DataFrame = {
+                        maxBucketSize: Int = 1000): DataFrame =
     RelationalOps.withMaterialized(buckets) { bk =>
-      val sized = bk.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") <= maxBucketSize && col("bsz") > 1)
-      val b = bk.join(sized.select("band", "bucket"), Seq("band", "bucket"))
       RelationalOps.materialized(
-        b.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-          .join(b.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-            .hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
-            Seq("band", "bucket"))
-          .filter(col("id_a") < col("id_b"))
+        bucketPairs(bk, Seq("band", "bucket"), idCol, maxBucketSize)
           .select("id_a", "id_b").distinct())
     }
-  }
-
 
   /** Incremental near-dup probe — the PRODUCTION dedup shape at corpus
     * scale: a new crawl batch is probed against the STANDING corpus
@@ -309,8 +310,11 @@ object Dedup {
     * are dropped BEFORE the join (the same boilerplate guard as
     * minhashCandidates — one all-identical-header bucket would
     * otherwise emit |corpus∩bucket|·|batch∩bucket| rows; review r20
-    * pass-3 #2). Output: distinct (new_id, old_id) candidate pairs;
-    * verify with true Jaccard downstream. */
+    * pass-3 #2). This is a probe across two sets, not a self-join, so it
+    * keeps its own corpus-side STOP list instead of [[bucketPairs]]'s
+    * keep list: a corpus bucket with one member can still match a batch
+    * doc. Output: distinct (new_id, old_id) candidate pairs; verify with
+    * true Jaccard downstream. */
   def incrementalCandidates(corpusBuckets: DataFrame,
                             batchBuckets: DataFrame,
                             idCol: String,
@@ -393,21 +397,17 @@ object Dedup {
       val w  = (s + 1) * bits / nSeg - lo
       shiftright(col("simhash"), lo).bitwiseAND(lit((1L << w) - 1))
     }: _*)
-    // persist the segmented frame: both self-join sides consume it, and
-    // its lineage (tokens → dictionary → signature) must run once, not twice
+    // persist the segmented frame: the bucket sizing and both self-join
+    // sides consume it, and its lineage (tokens → dictionary → signature)
+    // must run once, not per consumer. Pigeonhole recall = 1 needs every
+    // bucket, so there is no cap.
     RelationalOps.withMaterialized(
       sh.select(col(idCol), col("simhash"),
         posexplode(segVals).as(Seq("seg", "segval")))) { banded =>
-      val a = banded.select(col("seg"), col("segval"),
-        col(idCol).as("id_a"), col("simhash").as("sh_a"))
-      val b = banded.select(col("seg"), col("segval"),
-        col(idCol).as("id_b"), col("simhash").as("sh_b"))
       RelationalOps.materialized(
-        a.join(b.hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
-            Seq("seg", "segval"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b", "sh_a", "sh_b").distinct()
-          .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
+        bucketPairs(banded, Seq("seg", "segval"), idCol, Long.MaxValue)
+          .select("id_a", "id_b", "simhash_a", "simhash_b").distinct()
+          .withColumn("hamming", expr("bit_count(simhash_a ^ simhash_b)"))
           .filter(col("hamming") <= maxHamming)
           .select("id_a", "id_b", "hamming"))
     }

@@ -32,12 +32,10 @@ object Similarity {
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  def norm2Hof(a: Column): Column = dotHof(a, a)
-
   /** HOF cosine — bit-identical to [[cosine]]; used to cross-check the
     * native expression in tests. */
   def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (sqrt(norm2Hof(a)) * sqrt(norm2Hof(b)))
+    dotHof(a, b) / (sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)))
 
   /** cos(a, b) — fused single-pass codegen expression
     * ([[graft.functions.CosineSimilarity]]): interpreted HOF lambdas
@@ -64,11 +62,17 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("score", round(cosine(col("qv"), col("xv")), 6))
       .select("query_id", "neighbor_id", "score")
+    nearest(scored, k)
+  }
+
+  /** The `k` best neighbours of each query in a (query_id, neighbor_id,
+    * score) frame — score descending, ties to the smaller neighbour id,
+    * numbered in `rank`: the one ranking every top-k operator emits. */
+  private def nearest(scored: DataFrame, k: Int): DataFrame =
     RelationalOps.topKPerGroup(scored,
       part = Seq(col("query_id")),
       order = Seq(col("score").desc, col("neighbor_id").asc),
       k = k, rankCol = "rank")
-  }
 
   /** All pairs with cosine ≥ threshold — brute force. O(n²) pair scores:
     * the explicitly-named baseline for small corpora and for recall
@@ -89,10 +93,11 @@ object Similarity {
     * independent bucket ids (row-local — no shuffle until the bucket
     * groupBy); a pair is a candidate iff it shares ANY band bucket
     * (recall ≈ 1−(1−p^r)^b, the standard LSH amplification), buckets
-    * above `maxBucketSize` are dropped (boilerplate guard: one degenerate
-    * bucket must not emit O(n²) pairs), and only candidates get the exact
-    * O(dims) cosine. Shuffles carry (band, bucket, id) keys — never all
-    * pairs. Threshold compares the rounded score for engine parity. */
+    * above `maxBucketSize` are dropped ([[Dedup.bucketPairs]]: one
+    * degenerate bucket must not emit O(n²) pairs), and only candidates
+    * get the exact O(dims) cosine. Shuffles carry (band, bucket, id)
+    * keys — never all pairs. Threshold compares the rounded score for
+    * engine parity. */
   def cosinePairsLsh(df: DataFrame, idCol: String, vecCol: String,
                      dims: Int, bands: Int, bitsPerBand: Int,
                      threshold: Double,
@@ -107,16 +112,8 @@ object Similarity {
         e.select(col(idCol),
           posexplode(lshBandBuckets(col("v"), dims, bands, bitsPerBand))
             .as(Seq("band", "bucket")))) { banded =>
-        val sized = banded.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
-        val b2 = banded.join(sized.select("band", "bucket"),
-          Seq("band", "bucket"))
-        val cand = b2.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-          .join(b2.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-            .hint("shuffle_hash"), // post-explode estimates undercount: no broadcast
-            Seq("band", "bucket"))
-          .filter(col("id_a") < col("id_b"))
+        val cand = Dedup.bucketPairs(banded, Seq("band", "bucket"), idCol,
+            maxBucketSize)
           .select("id_a", "id_b").distinct()
         RelationalOps.materialized(cand
           .join(e.select(col(idCol).as("id_a"), col("v").as("va")), Seq("id_a"))
@@ -130,9 +127,10 @@ object Similarity {
 
   /** ANN: exact cosine top-k, but only within sign-LSH buckets. Recall is
     * tunable via nBits (fewer bits → bigger buckets → higher recall);
-    * buckets above `maxBucketSize` are dropped so a degenerate bucket
-    * (e.g. the all-zeros region) cannot make the in-bucket join
-    * quadratic in n. */
+    * buckets above `maxBucketSize` are dropped ([[Dedup.bucketPairs]]) so
+    * a degenerate bucket (e.g. the all-zeros region) cannot make the
+    * in-bucket join quadratic in n. Each unordered pair is scored once
+    * and then ranked for both of its vectors. */
   def lshBucketedTopK(df: DataFrame, idCol: String, vecCol: String,
                       dims: Int, nBits: Int, k: Int,
                       maxBucketSize: Int = 1000): DataFrame = {
@@ -142,19 +140,17 @@ object Similarity {
     RelationalOps.withMaterialized(
       df.select(col(idCol), asDouble(col(vecCol)).as("v"))
         .withColumn("bucket", lshBucketInt(col("v"), dims, nBits))) { e =>
-      val sized = e.groupBy("bucket").agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") > 1 && col("bsz") <= maxBucketSize)
-      val eb = e.join(sized.select("bucket"), Seq("bucket"))
-      val a = eb.select(col("bucket"), col(idCol).as("query_id"), col("v").as("qv"))
-      val b = eb.select(col("bucket"), col(idCol).as("neighbor_id"), col("v").as("xv"))
-      val scored = a.join(b.hint("shuffle_hash"), Seq("bucket"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("score", round(cosine(col("qv"), col("xv")), 6))
-        .select("bucket", "query_id", "neighbor_id", "score")
-      RelationalOps.materialized(RelationalOps.topKPerGroup(scored,
-        part = Seq(col("query_id")),
-        order = Seq(col("score").desc, col("neighbor_id").asc),
-        k = k, rankCol = "rank"))
+      // cosine is symmetric bit-for-bit (IEEE products commute), so one
+      // score serves the (a, b) and (b, a) orientations
+      val scored = Dedup.bucketPairs(e, Seq("bucket"), idCol, maxBucketSize)
+        .select(col("bucket"),
+          round(cosine(col("v_a"), col("v_b")), 6).as("score"),
+          explode(array(
+            struct(col("id_a").as("query_id"), col("id_b").as("neighbor_id")),
+            struct(col("id_b").as("query_id"), col("id_a").as("neighbor_id"))))
+            .as("qn"))
+        .select("bucket", "qn.query_id", "qn.neighbor_id", "score")
+      RelationalOps.materialized(nearest(scored, k))
     }
   }
 
@@ -204,10 +200,7 @@ object Similarity {
           .filter(col("query_id") =!= col(idCol))
           .withColumn("score", round(cosine(col("qv"), col("v")), 6))
           .select(col("query_id"), col(idCol).as("neighbor_id"), col("score"))
-        RelationalOps.materialized(RelationalOps.topKPerGroup(scored,
-          part = Seq(col("query_id")),
-          order = Seq(col("score").desc, col("neighbor_id").asc),
-          k = k, rankCol = "rank"))
+        RelationalOps.materialized(nearest(scored, k))
       }
     }
   }

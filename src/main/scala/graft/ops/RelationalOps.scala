@@ -18,8 +18,10 @@ object RelationalOps {
     * and materialize it with one count job, so every later consumer scans
     * the cache instead of re-running the lineage. The way to hand an
     * owned, persisted result to the caller (operator outputs); the caller
-    * owns the returned handle. A cache used only inside one scope goes
-    * through [[withMaterialized]] instead. */
+    * owns the returned handle. The count is what makes it owned: an
+    * output read from a [[withMaterialized]] intermediate must be filled
+    * before that intermediate is released. A cache used only inside one
+    * scope goes through [[withMaterialized]] instead. */
   def materialized(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     p.count()
@@ -30,8 +32,9 @@ object RelationalOps {
     * into several consumers (a shingle / bucket / banded frame feeding a
     * sized filter and a self-join) — unpersisted, the lineage above the
     * fan-out runs once PER consumer, at 100 TB re-reading the corpus ~4×.
-    * Persists `df` (MEMORY_AND_DISK), materializes it with one count job,
-    * runs `body` over the cache and unpersists it in a `finally`, so the
+    * Persists `df` (MEMORY_AND_DISK) without running a job: the body's
+    * first action fills the cache and every later consumer scans it.
+    * Runs `body` over the cache and unpersists it in a `finally`, so the
     * cache is released when `body` throws too. If `df` is already
     * persisted — a cache the CALLER holds to reuse across several passes —
     * `body` runs on it and nothing is released: persist state lives on the
@@ -45,10 +48,7 @@ object RelationalOps {
     if (df.storageLevel != StorageLevel.NONE) body(df)
     else {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        p.count()
-        body(p)
-      } finally p.unpersist()
+      try body(p) finally p.unpersist()
     }
 
   /** J1 — "trim low-importance elements", the reference's most distinctive

@@ -40,7 +40,7 @@ class ExtSpec extends AnyFunSuite {
   test("minhash LSH banding surfaces identical docs as candidates") {
     val d = docs(1L -> "w x y z a b", 2L -> "w x y z a b", 3L -> "p q r s t u")
     val sh  = Dedup.shingles(d, "doc_id", "text", 3)
-    val ids = Dedup.shingleIds(sh, useDictionaryIds = true)
+    val ids = Dedup.shingleIds(sh)
     val bk  = Dedup.minhashBuckets(ids, "doc_id", numHashes = 16, rowsPerBand = 4)
     val cand = Dedup.minhashCandidates(bk, "doc_id")
       .as[(Long, Long)].collect().toSet
@@ -48,12 +48,12 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("minhash production path (xxhash64 ids, no dictionary) finds planted dups") {
-    // the scale path skips the sorted dictionary entirely — shingle ids
-    // are row-local xxhash64; candidates must still surface identical docs
+    // the scale path (minhashBucketsRowLocal) skips the sorted dictionary
+    // entirely — shingle ids are row-local xxhash64; candidates must still
+    // surface identical docs
     val d = docs(1L -> "w x y z a b", 2L -> "w x y z a b", 3L -> "p q r s t u")
-    val sh  = Dedup.shingles(d, "doc_id", "text", 3)
-    val ids = Dedup.shingleIds(sh, useDictionaryIds = false)
-    val bk  = Dedup.minhashBuckets(ids, "doc_id", numHashes = 16, rowsPerBand = 4)
+    val bk = Dedup.minhashBucketsRowLocal(d, "doc_id", "text", n = 3,
+      numHashes = 16, rowsPerBand = 4)
     val cand = Dedup.minhashCandidates(bk, "doc_id")
       .as[(Long, Long)].collect().toSet
     assert(cand == Set((1L, 2L)))
@@ -78,8 +78,8 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("simhash accepts full-range xxhash64 token ids (no ANSI overflow)") {
-    // production path: shingleIds(useDictionaryIds = false) emits
-    // xxhash64 ids spanning the full signed-64 range; the unguarded
+    // production path: xxhash64 shingle ids (minhashBucketsRowLocal)
+    // span the full signed-64 range; the unguarded
     // sid * 2654435761 overflows long and ANSI mode (Spark 4 default)
     // throws. The pmod reduction must make this a working hash, and
     // dictionary-id values must be unchanged by it (pmod is identity
@@ -121,7 +121,7 @@ class ExtSpec extends AnyFunSuite {
       // passes): its scan must be an InMemoryTableScan, not a re-run of
       // the shingling lineage
       val mh = Dedup.minhashBuckets(
-        Dedup.shingleIds(sh, useDictionaryIds = false), "doc_id",
+        sh.withColumn("sid", xxhash64(col("shingle"))), "doc_id",
         numHashes = 8, rowsPerBand = 2)
       assert(mh.count() > 0)
       val plan = mh.queryExecution.executedPlan.toString
@@ -333,6 +333,35 @@ class ExtSpec extends AnyFunSuite {
     assert(lsh.subsetOf(brute))
     // identical vectors share every band bucket → always found
     assert(lsh.exists { case (a, b, c) => a == 1L && b == 31L && c == 1.0 })
+  }
+
+  test("lshBucketedTopK == brute-force top-k over same-bucket pairs") {
+    // the q36 oracle shape: bucket every vector (the HOF reference
+    // hashing), keep buckets of 2..cap members, rank each vector's
+    // bucket-mates by (score desc, id asc) and keep k. The cap drops the
+    // largest bucket.
+    val rnd = new scala.util.Random(13)
+    val vecs = (1L to 40L).map(i => (i, Seq.fill(4)(rnd.nextGaussian())))
+    val bucketOf = vecs.toDF("vec_id", "embedding").select(col("vec_id"),
+        element_at(Similarity.lshBandBucketsHof(col("embedding"), 4, 1, 2), 1))
+      .as[(Long, Long)].collect().toMap
+    val cap = vecs.groupBy(v => bucketOf(v._1)).values.map(_.size).max - 1
+    def cos(a: Seq[Double], b: Seq[Double]) = BigDecimal(
+        a.zip(b).map(p => p._1 * p._2).sum /
+          (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val want = vecs.groupBy(v => bucketOf(v._1)).filter(_._2.size <= cap)
+      .toSeq.flatMap { case (bucket, m) => m.flatMap { case (q, qv) =>
+        m.filter(_._1 != q).map { case (n, nv) => (n, cos(qv, nv)) }
+          .sortBy { case (n, sc) => (-sc, n) }.take(3).zipWithIndex
+          .map { case ((n, sc), i) => (bucket, q, n, sc, i + 1) }
+      } }
+    val got = Similarity.lshBucketedTopK(vecs.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", dims = 4, nBits = 2, k = 3, maxBucketSize = cap)
+      .select("bucket", "query_id", "neighbor_id", "score", "rank")
+      .as[(Long, Long, Long, Double, Int)].collect()
+    assert(want.nonEmpty && got.sorted.toSeq == want.sorted,
+      s"extra ${got.toSet -- want}, missing ${want.toSet -- got}")
   }
 
   test("tfidf: exact values on a known corpus") {

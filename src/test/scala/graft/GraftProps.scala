@@ -87,7 +87,7 @@ object GraftProps extends Properties("graft") {
         val docs = (texts.zipWithIndex.map { case (t, i) => ((i + 1).toLong, t) }
           :+ (100L, texts.head)).toDF("doc_id", "text")
         val sh = graft.ext.Dedup.shingles(docs, "doc_id", "text", 3)
-        val ids = graft.ext.Dedup.shingleIds(sh, useDictionaryIds = false)
+        val ids = sh.withColumn("sid", xxhash64(col("shingle")))
         val bk = graft.ext.Dedup.minhashBuckets(ids, "doc_id", 16, 4)
         val cand = graft.ext.Dedup.minhashCandidates(bk, "doc_id")
           .as[(Long, Long)].collect().toSet

@@ -138,6 +138,15 @@ class RegistrySpec extends AnyFunSuite {
     assert(blocks == builder, s"setNumBlocks at $blocks")
   }
 
+  test("bucket self-joins have one site") {
+    // every LSH / inverted-index candidate generator self-joins through
+    // Dedup.bucketPairs, the one place that sizes, caps and joins the
+    // buckets. Split literals, so this file does not match its own scan.
+    val hinted = sites("shuffle" + "_hash")
+    assert(hinted == Seq("graft/ext/Dedup.scala:bucketPairs"),
+      s"shuffle-hash self-join at $hinted")
+  }
+
   test("oracle SQL never references fixture paths or engine internals") {
     QueryRegistry.all.flatMap(_.oracle).foreach { sql =>
       assert(!sql.contains("/root/"), "oracle must address tables by name")
